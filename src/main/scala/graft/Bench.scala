@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.queries.FrameMemo
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   /** Runs every SparkEntry query SPARK_GRAFT_PASSES times (default 2)
@@ -36,25 +37,83 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** JSON string literal: backslash, quote and ALL control chars
+    * (<0x20) escaped — a tab or CR in builder-authored SQL would
+    * otherwise make a reader's json.load fail.
+    */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Times every query once per pass, passes iterating over the WHOLE
+    * list before repeating (a transient host stall can't hit both
+    * observations of the same query). Returns the per-pass times of
+    * the queries that ran clean in every pass, and the first error of
+    * each query that threw: a thrown query has no time, so it never
+    * enters the min, the total or the regression reference.
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+                                 selected: Seq[(String, Query)],
+                                 passes: Int): (Seq[Map[String, Double]], Map[String, String]) = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOne(name: String, fn: Query): Option[Double] =
+      // the checkpoint sweep runs after this window closes: untimed,
+      // and each invocation rebuilds its own checkpoints, so measured
+      // work is unchanged
+      FrameMemo.withInvocationCheckpoints(spark) {
+        // charge any shared-memo build that lands in this window to
+        // this query by name (the FrameMemo build ledger) — the drift
+        // forensics that tells "plan got slower" apart from "memo
+        // build cost moved to a different first consumer"
+        FrameMemo.currentConsumer.set(name)
+        val t0 = System.nanoTime()
+        // noop-format write forces full evaluation of every output
+        // column (count() lets Catalyst prune unused projections,
+        // under-measuring map-only queries) with no driver transfer
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          failed.getOrElseUpdate(name, e.toString)
+          None
+        } finally FrameMemo.currentConsumer.remove()
+      }
+    val runs = (1 to passes).map { _ =>
+      selected.flatMap { case (n, f) => timeOne(n, f).map(n -> _) }.toMap
+    }
+    (runs.map(_ -- failed.keySet), failed.toMap)
+  }
+
+  /** The one stdout result line. Slowest queries first, as many as fit
+    * in [[MaxLineChars]] (`total` always covers every clean query;
+    * `dropped` counts the elided ones); `failed` counts the queries
+    * that threw; `fields` is the rest of the object, already rendered.
+    */
+  private[graft] def resultLine(total: Double, results: Map[String, Double],
+                                failed: Int, fields: String): String = {
+    val bySlow = results.toSeq.sortBy { case (_, v) => -v }
+    def line(keep: Int): String = {
+      val qs = bySlow.take(keep).map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
+      val dropped = bySlow.length - keep
+      val tail = if (dropped > 0) s""","dropped":$dropped""" else ""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$tail,"failed":$failed,$fields}"""
+    }
+    var keep = bySlow.length
+    while (keep > 1 && line(keep).length > MaxLineChars) keep -= 1
+    line(keep)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-code cache defaults to 100 entries; this session
-      // plans 320 queries x several WholeStageCodegen units each, so
-      // at the default every pass re-pays janino compilation for code
-      // it compiled minutes ago (pure fixed cost, any data scale — the
-      // same knob a long-lived multi-query service sets). Static conf:
-      // must be set before the session exists. Sized to hold the whole
-      // suite's units; generated classes are KBs (code cache is 1g).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
+    val cpus = Harness.cpus
+    val spark = Harness.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // silence WindowExec's single-partition WARN spam: every firing in
     // this suite is an adjudicated bounded frame (aggregated K-row
@@ -63,14 +122,6 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // the per-query block-hygiene sweep (timeOne) unpersists
-    // invocation-local localCheckpoint RDDs; each unpersist logs a
-    // "lineage has been truncated" WARN that is benign BY CONSTRUCTION
-    // here (the frame's consumer has already fully materialized) and,
-    // at one line per checkpoint per pass, would crowd the ~2 KiB
-    // stdout tail the driver parses
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     // session warmup so the first timed query doesn't absorb executor/
     // codegen/file-index startup (~3-4 s of one-time JVM cost). Every
     // table is counted once: filesystem init, FileIndex listing, and
@@ -141,41 +192,7 @@ object Bench {
     // running, the single-run artifact was dominated by host contention —
     // ~77 s of noise on a ~93 s workload in round 6, with disjoint spike
     // sets per run and clean GC logs (see SCALING.md "Bench variance").
-    // Passes iterate over the WHOLE list before repeating, so a transient
-    // host stall can't hit both observations of the same query.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt).getOrElse(2)
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // charge any shared-memo build that lands in this window to this
-      // query by name (the FrameMemo build ledger, emitted below) —
-      // the drift forensics that tells "plan got slower" apart from
-      // "memo build cost moved to a different first consumer"
-      graft.queries.FrameMemo.currentConsumer.set(name)
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val t0 = System.nanoTime()
-      // noop-format write forces full evaluation of every output column
-      // (count() lets Catalyst prune unused projections, under-measuring
-      // map-only queries) with no driver transfer and no disk cost
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      finally graft.queries.FrameMemo.currentConsumer.remove()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // Block hygiene (guide §5, ADVICE r15): per-invocation
-      // localCheckpoint blocks (query-local shared subtrees) are only
-      // reachable through the DataFrame just consumed — left persisted,
-      // 320 queries x 2 passes of them pile up in the block manager and
-      // the heap until a full GC lands a multi-second pause on whatever
-      // memory-heavy query runs next (the driver-run r15 regressed map:
-      // q_bootstrap 0.5s ref -> 9.0s, q_embed_quantize 0.36 -> 3.5s on
-      // a clean 1.00 epoch). Free every persistent RDD this window
-      // created EXCEPT frames the shared memos own; the sweep runs
-      // OUTSIDE the timed region and each invocation rebuilds its own
-      // checkpoints, so measured work is unchanged.
-      val owned = graft.queries.FrameMemo.ownedRddIds
-      for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
-           if !persistedBefore.contains(id) && !owned.contains(id))
-        rdd.unpersist(blocking = false)
-      elapsed
-    }
     // PRIOR-round per-query reference, keyed BY SCALE FACTOR AND CORE
     // COUNT (bench_ref_<sf>_c<cpus>.json — ratios across sfs are
     // meaningless, and as of r16 cross-CPU ratios are excluded too:
@@ -210,10 +227,11 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-    val runs: Seq[Map[String, Double]] =
-      (1 to passes).map { _ => selected.map { case (n, f) => n -> timeOne(n, f) }.toMap }
+    val (runs, failed) = timeQueries(spark, sfDir, selected.toSeq, passes)
+    failed.foreach { case (n, e) => System.err.println(s"[bench] $n failed: $e") }
     val results: Map[String, Double] =
-      selected.keys.map { n => n -> runs.map(_(n)).min }.toMap
+      selected.keys.filterNot(failed.contains)
+        .map { n => n -> runs.map(_(n)).min }.toMap
     val total = if (results.nonEmpty) results.values.sum else 0.0
 
     // EPOCH-LOAD FACTOR: the median per-query ratio vs the prior
@@ -245,10 +263,7 @@ object Bench {
       case (n, ratio) => "\"" + n + "\":" + fmt(ratio)
     }
 
-    def line(entries: Seq[(String, Double)], dropped: Int): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val tail = if (dropped > 0) s""","dropped":$dropped""" else ""
+    val lineFields: String = {
       val reg = regressed.mkString("{", ",", "}")
       // the memo TAX this run actually paid in wall-clock: the
       // concurrent-prewarm phase (overlapped builds count once, as
@@ -264,7 +279,7 @@ object Bench {
         if (only.nonEmpty) "bench_full_subset.json"
         else if (loadedArtifacts == 0) "bench_full.json"
         else "bench_full_warm.json"
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$tail,"regressed":$reg,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir"}"""
+      s""""regressed":$reg,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir""""
     }
 
     // Full-precision record to disk (survives any stdout truncation).
@@ -282,12 +297,12 @@ object Bench {
     // its cost and the query whose timed window absorbed it — the
     // regression guard's companion (a query whose 1.4x "regression" is
     // a memo build that moved consumers is drift, not a plan change)
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val memoJson = graft.queries.FrameMemo.buildLog.map {
       case (key, secs, consumer) =>
         s"""{"key":${jstr(key)},"sec":${fmt(secs)},"consumer":${jstr(consumer)}}"""
     }.mkString("[", ",", "]")
+    val failedJson = failed.map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }
+      .mkString("{", ",", "}")
     // a WARM-artifact run's per-query times exclude the index builds a
     // cold run pays, so it must never become the cold regression
     // reference or rotate the cold ring (a later cold run would flag
@@ -320,7 +335,7 @@ object Bench {
         else if (coldFull) "bench_full.json"
         else "bench_full_warm.json"
       val w = new java.io.PrintWriter(fullName, "UTF-8")
-      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"prewarm_wall":$prewarmWall,"epoch":$epochFactor,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"failed":$failedJson,"prewarm_wall":$prewarmWall,"epoch":$epochFactor,"sf":"$sfDir"}""")
       finally w.close()
       // a FULL COLD run becomes the next run's per-sf regression
       // reference; subset and warm-artifact runs never touch it
@@ -352,17 +367,12 @@ object Bench {
         }
       }
 
-    // Slowest-first so that, if truncation is ever needed, the queries that
-    // matter for performance analysis are the ones that survive.
-    val bySlow = results.toSeq.sortBy { case (_, v) => -v }
-    var keep = bySlow.length
-    while (keep > 1 && line(bySlow.take(keep), bySlow.length - keep).length > MaxLineChars)
-      keep -= 1
+    val out = resultLine(total, results, failed.size, lineFields)
     // stop() BEFORE the result line: Spark shutdown can log to stdout,
     // and anything printed after the JSON eats into the tail window the
     // driver parses — the line must be the program's last stdout write
     spark.stop()
-    println(line(bySlow.take(keep), bySlow.length - keep))
+    println(out)
     System.out.flush()
   }
 }

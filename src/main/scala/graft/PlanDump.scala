@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only plan dumper: `.explain("formatted")` text for named queries,
   * one `===== name =====` block each, on a session configured like the
@@ -10,16 +9,11 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN", "formatted") match {
       case "simple" => org.apache.spark.sql.execution.SimpleMode
       case _        => org.apache.spark.sql.execution.FormattedMode
     }
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true").getOrCreate()
+    val spark = Harness.builder(Harness.cpus, Harness.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"===== $name =====")

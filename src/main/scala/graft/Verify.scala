@@ -1,30 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (we never
-      // select ts for oracle outputs — ns precision exceeds TimestampType)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench: 320 plans overflow the default 100-entry generated-
-      // code cache, re-paying janino per dump
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4000"))
-      .getOrCreate()
+    val spark = Harness.builder(Harness.cpus, Harness.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // benign-by-construction WARN from the per-query checkpoint sweep
-    // below (see Bench) — silenced so real failures stay visible
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b dumps a subset — local profiling aid
     // (the driver never sets it; oracle_sql.json always stays complete)
@@ -35,33 +17,14 @@ object Verify {
       case None        => SparkEntry.queries
     }
     selected.foreach { case (name, fn) =>
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      graft.queries.FrameMemo.withInvocationCheckpoints(spark) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      // block hygiene, same sweep as Bench: free this query's
-      // invocation-local checkpoint blocks (shared-memo frames are
-      // owned and skipped) so 320 sequential dumps don't accumulate
-      // heap pressure into GC pauses
-      val owned = graft.queries.FrameMemo.ownedRddIds
-      for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
-           if !persistedBefore.contains(id) && !owned.contains(id))
-        rdd.unpersist(blocking = false)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // trained-artifact oracles (BPE merges) build here, against the
     // same session + dataset the queries ran on; a build failure falls
     // back to the static map (the affected query degrades to the
@@ -73,7 +36,7 @@ object Verify {
         Map.empty[String, String]
       }
     val json = (SparkEntry.oracleSql ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -50,14 +50,10 @@ object Ivm {
       .agg(sum(col("dv")).as("d_sum"), sum(col("dn")).as("d_n"))
       // cancel-outs (net-zero keys) leave the view row untouched; the
       // recompute oracle sees no difference there either, so suppress.
-      // (The STREAMING twin must NOT suppress — a running delta that
-      // returns to zero has to tell the merger "back to base" — see
-      // EventStreamOps.streamingViewDelta.)
       .filter(col("d_n") =!= 0L || col("d_sum") =!= lit(0).cast(valueType))
 
   /** The un-aggregated signed delta rows (k, dv, dn) — one or two per
-    * event. Shared by the batch [[viewDelta]] and the streaming twin
-    * (which aggregates them as a running per-key state instead).
+    * event, aggregated by [[viewDelta]].
     */
   def signedDeltas(events: DataFrame, groupKey: String, valueCol: String,
                    valueType: String = "decimal(12,2)"): DataFrame = {

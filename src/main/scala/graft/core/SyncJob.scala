@@ -192,17 +192,9 @@ object SyncJob {
     * list (P5), sync each, optionally wipe (keep-last retention).
     * Per-table work is independent — at scale each table is its own
     * Spark job (the reference processed tables serially in one PHP
-    * process, SURVEY.md §4 last row) — and `parallelism > 1` makes
-    * that concrete: tables submit CONCURRENTLY from a scoped
-    * fixed-size pool, so a cluster with idle executors overlaps the
-    * per-table scan/write jobs instead of draining them one at a time
-    * (Spark's scheduler is thread-safe for concurrent job submission;
-    * each table's watermark sidecar is its own directory, so no state
-    * is shared between threads). Every table runs to completion even
-    * when another fails — partial progress is per-table durable,
-    * exactly like separate cron invocations — and the FIRST failure is
-    * rethrown after the pool drains. `onTable` is a test seam fired as
-    * each table's job starts in its worker thread.
+    * process, SURVEY.md §4 last row) — and `parallelism > 1` submits
+    * tables CONCURRENTLY ([[forEachTable]]). `onTable` is a test seam
+    * fired as each table's job starts in its worker thread.
     */
   def syncAll(spark: SparkSession,
               logs: Map[String, DataFrame],
@@ -210,38 +202,49 @@ object SyncJob {
               include: Option[Set[String]] = None,
               parallelism: Int = 1,
               onTable: String => Unit = _ => ()): Map[String, Long] = {
-    require(parallelism >= 1, "parallelism must be >= 1")
     val selected = logs.filter { case (name, _) =>
       AuditSchema.isAuditTable(name) && include.forall(_.contains(name))
     }
-    def one(name: String, log: DataFrame): Long = {
+    forEachTable(selected.keys.toSeq, parallelism) { name =>
       onTable(name)
       spark.sparkContext.setJobDescription(s"syncTable($name)")
-      try syncTable(spark, log, s"$sinkRoot/$name")
+      try syncTable(spark, selected(name), s"$sinkRoot/$name")
       finally spark.sparkContext.setJobDescription(null)
     }
-    if (parallelism == 1 || selected.size <= 1)
-      selected.map { case (name, log) => name -> one(name, log) }
+  }
+
+  /** Run `one` for every table, up to `parallelism` at once from a
+    * scoped fixed-size pool, so a cluster with idle executors overlaps
+    * the per-table scan/write jobs instead of draining them one at a
+    * time (Spark's scheduler is thread-safe for concurrent job
+    * submission; each table's watermark sidecar is its own directory,
+    * so no state is shared between threads). Every table runs to
+    * completion even when another fails — partial progress is
+    * per-table durable, exactly like separate cron invocations — and
+    * the FIRST failure is rethrown after the pool drains.
+    */
+  private[graft] def forEachTable[T](tables: Seq[String], parallelism: Int)
+                                    (one: String => T): Map[String, T] = {
+    require(parallelism >= 1, "parallelism must be >= 1")
+    if (parallelism == 1 || tables.size <= 1) tables.map(t => t -> one(t)).toMap
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, selected.size))
+        math.min(parallelism, tables.size))
       try {
-        val futs = selected.toSeq.map { case (name, log) =>
-          name -> pool.submit(new java.util.concurrent.Callable[Long] {
-            override def call(): Long = one(name, log)
+        val futs = tables.map { t =>
+          t -> pool.submit(new java.util.concurrent.Callable[T] {
+            override def call(): T = one(t)
           })
         }
         // drain EVERY table before surfacing a failure: a broken table
         // must not abandon its siblings mid-write
-        val results = futs.map { case (name, f) =>
-          name -> scala.util.Try(f.get())
-        }
+        val results = futs.map { case (t, f) => t -> scala.util.Try(f.get()) }
         results.collectFirst {
           case (_, scala.util.Failure(e: java.util.concurrent.ExecutionException)) =>
             throw e.getCause
           case (_, scala.util.Failure(e)) => throw e
         }
-        results.map { case (name, r) => name -> r.get }.toMap
+        results.map { case (t, r) => t -> r.get }.toMap
       } finally pool.shutdown()
     }
   }
@@ -266,6 +269,10 @@ object SyncJob {
     * file. Returns the number of rows retained (1, or 0 for an empty
     * log). `afterSnapshot` is a test seam fired between the listing
     * and the deletes (to exercise a concurrent append).
+    *
+    * A partitioned log ([[AuditLake.writePartitionedLog]]) keeps its
+    * part files in sub-directories this snapshot never lists; the
+    * wipe throws on one instead of silently compacting nothing.
     */
   def wipeLogDir(spark: SparkSession, logDir: String,
                  afterSnapshot: () => Unit = () => (),
@@ -274,7 +281,15 @@ object SyncJob {
       spark.sparkContext.hadoopConfiguration)
     val dir = new org.apache.hadoop.fs.Path(logDir)
     if (!fs.exists(dir)) return 0L
-    val snapshot = fs.listStatus(dir).filter(f =>
+    val entries = fs.listStatus(dir)
+    // `_`/`.`-prefixed sub-directories are a writer's scratch space
+    // (`_temporary`), not partitions
+    entries.filter(_.isDirectory).map(_.getPath.getName)
+      .find(n => !n.startsWith("_") && !n.startsWith("."))
+      .foreach(sub => throw new IllegalArgumentException(
+        s"wipeLogDir: $logDir is a partitioned log (sub-directory $sub); " +
+          "only a flat log directory can be wiped"))
+    val snapshot = entries.filter(f =>
       f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
     if (snapshot.isEmpty) return 0L
     val log  = spark.read.parquet(snapshot.toIndexedSeq.map(_.toString): _*)

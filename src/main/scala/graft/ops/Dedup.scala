@@ -712,11 +712,7 @@ object Dedup {
     * re-hashes the indexed corpus.
     */
   /** The LSH band keys of a MinHash signature column: bands md5 keys,
-    * one per `rows`-wide slice. The ONE definition of the band hash —
-    * shared by the batch index builder ([[minhashBands]]) and the
-    * streaming probe ([[graft.streaming.EventStreamOps
-    * .streamingSourceOverlap]]), so a streamed document hashes into
-    * exactly the bucket its batch-indexed twin occupies.
+    * one per `rows`-wide slice — the band hash of [[minhashBands]].
     */
   private[graft] def bandKeyArray(mh: Column, numHashes: Int,
                                   bands: Int): Column = {

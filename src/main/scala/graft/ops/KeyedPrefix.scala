@@ -40,8 +40,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (partitions × keys tuples) and a same-sized broadcast; both passes
   * are embarrassingly parallel and the range sort is Spark's own
   * scalable total sort. Used by the SPRT batch replay
-  * ([[graft.queries.ExtensionQueries.sprtQ]]); the streaming twin
-  * needs none of this (its state is already O(1) per key).
+  * ([[graft.queries.ExtensionQueries.sprtQ]]).
   */
 object KeyedPrefix {
 

@@ -448,13 +448,6 @@ object Multimodal {
     }
   }
 
-  /** Attach REAL PCM sample statistics ([[decodePcmStats]]) — same
-    * Iterator→Iterator per-partition batching contract as
-    * [[decodeAudioMeta]]; output schema = input ++ [[pcmStatsSchema]].
-    */
-  def decodePcmMeta(df: DataFrame, binCol: String): DataFrame =
-    attachMeta(df, binCol, pcmStatsSchema, decodePcmStats)
-
   /** Canonical 44-byte-header WAV writer (16-bit PCM LE, the
     * ubiquitous layout) — the sample-level twin of the header parsers
     * above, used by the synth→decode round-trip and the specs. Values
@@ -592,13 +585,6 @@ object Multimodal {
     }
   }
 
-  /** Attach REAL pixel statistics ([[decodeImagePixels]]) — same
-    * Iterator→Iterator per-partition batching contract as the other
-    * decoders; output schema = input ++ [[imageStatsSchema]].
-    */
-  def decodePixelMeta(df: DataFrame, binCol: String): DataFrame =
-    attachMeta(df, binCol, imageStatsSchema, decodeImagePixels)
-
   /** Canonical uncompressed 24-bpp BMP writer (BITMAPINFOHEADER,
     * bottom-up BGR rows, 4-byte stride padding) — the image twin of
     * [[wavBytes]]: a deterministic, byte-exact container for the
@@ -722,13 +708,6 @@ object Multimodal {
       case scala.util.control.NonFatal(_) => none
     }
   }
-
-  /** Attach the REAL perceptual fingerprint ([[decodeImageDHash]]) —
-    * same Iterator→Iterator per-partition batching contract as the
-    * other decoders; output schema = input ++ [[imageDHashSchema]].
-    */
-  def decodeDHashMeta(df: DataFrame, binCol: String): DataFrame =
-    attachMeta(df, binCol, imageDHashSchema, decodeImageDHash)
 
   /** Synth→decode perceptual-hash round-trip ([[synthBmpStats]]'s
     * fingerprint twin): each row's `0xRRGGBB` int-array column becomes

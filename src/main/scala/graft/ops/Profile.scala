@@ -76,12 +76,8 @@ object Profile {
   /** The rebuild-decision report that closes the ANN index lifecycle
     * loop: join [[indexHealth]]'s size-skew flags with an observed
     * probe-traffic frame and emit a per-list action. `loads` must be
-    * one `(list_key: string, n_probes)` row per probed list — a batch
-    * sample, or ONE window of a persisted
-    * [[graft.streaming.VectorStreamOps.streamingListLoads]] sink
-    * reshaped as `select(centroid_id.cast("string").as("list_key"),
-    * n_items.as("n_probes"))` (that op emits per-(window, centroid)
-    * counts, not this shape directly). Actions:
+    * one `(list_key: string, n_probes)` row per probed list, e.g. a
+    * batch sample of probe traffic. Actions:
     *
     *   - `split_now`  — oversized AND hot: the list dominates probe
     *     cost where traffic actually lands; split its centroid (run
@@ -112,8 +108,7 @@ object Profile {
     // lists ABSENT from the (possibly stale) health report still get a
     // hot test: a list born after the last audit that takes 90% of
     // probes must surface as `replicate`, not vanish from the report —
-    // a FULL outer join (the streaming twin handles the same case via
-    // its not-skewed default). Its size columns stay null (size
+    // a FULL outer join. Its size columns stay null (size
     // unknown until the next audit); skewed defaults false (no skew
     // claim without evidence).
     val hg = health.agg(

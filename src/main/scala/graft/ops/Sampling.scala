@@ -140,12 +140,9 @@ object Sampling {
     * id for full determinism (md5 collisions at 128 bits: effectively
     * never, but the gate demands bit-stable output).
     */
-  /** The Efraimidis–Spirakis priority itself — max of `w` md5 hexes —
-    * exposed as one shared kernel so the batch top-k and the live
-    * streaming reservoir ([[graft.streaming.EventStreamOps
-    * .streamingWeightedTopK]]) compute the IDENTICAL inclusion law
-    * and cannot diverge. Null/sub-1 weights yield a null priority
-    * (zero tickets — callers filter).
+  /** The Efraimidis–Spirakis priority itself — max of `w` md5 hexes.
+    * Null/sub-1 weights yield a null priority (zero tickets — callers
+    * filter).
     */
   def esPriority(id: Column, weight: Column, weightCap: Int): Column = {
     // coalesce BEFORE least: Spark's least() skips nulls, so a null

@@ -51,10 +51,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
-  /** Cosine similarity, unrolled for a known dimension ([[dotD]]). */
-  def cosineD(a: Column, b: Column, dim: Int): Column =
-    dotD(a, b, dim) / (sqrt(dotD(a, a, dim)) * sqrt(dotD(b, b, dim)))
-
   /** Deterministic hyperplane-LSH bucket id in [0, 2^planes).
     *
     * Coefficients come from [[planeCoeffs]] (sparse Achlioptas ±1/0,
@@ -580,48 +576,6 @@ object Similarity {
       .select("src", "neg_id", "rank", "cos_q", "src_cluster", "neg_cluster")
   }
 
-  /** Per-row nearest-centroid assignment against FROZEN in-plan
-    * centroids: the coarse quantizer as a PURE PROJECTION — centroids
-    * ride along as literals (ids, component arrays, precomputed
-    * norms), the argmax is `array_max` over per-centroid
-    * (quantized-cos, -id) structs. No join, no aggregation, no
-    * shuffle, no state — which is exactly what makes it legal inside a
-    * STREAMING projection ([[graft.streaming.VectorStreamOps]]), where
-    * the batch path's crossJoin + max_by aggregation would be a
-    * stateful operator.
-    *
-    * Bit-parity with [[assignToCentroids]] (spec-pinned): the same
-    * quantized cosine ([[cosQ]]'s floor(dot/(n·n)·10⁴)), the same
-    * (cos desc, id asc) tiebreak via max over (q, -id), and literal
-    * centroid norms folded left-to-right exactly like [[norm]]'s
-    * in-plan fold.
-    *
-    * Centroids are bounded by construction (a trained quantizer's k),
-    * so in-plan literals are the right representation — same contract
-    * as the in-plan classifier weights
-    * ([[graft.ops.TextStats.qualityClassifier]]).
-    */
-  def assignFrozen(vecs: DataFrame, centroids: Seq[(Long, Seq[Double])],
-                   dim: Int = 64, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    val scored = centroids.map { case (cid, cv) =>
-      require(cv.length == dim, s"centroid $cid has ${cv.length} dims, expected $dim")
-      val cvLit = array(cv.map(lit): _*)
-      // same op sequence as norm(): 0.0 + x0*x0 + x1*x1 + ... then sqrt
-      val cn = lit(math.sqrt(cv.foldLeft(0.0)((a, x) => a + x * x)))
-      struct(
-        floor(dotD(col("_vq"), cvLit, dim) / (col("_qn") * cn) * 10000)
-          .cast("long").as("q"),
-        lit(-cid).as("nid"))
-    }
-    vecs
-      .withColumn("_vq", transform(col(vecCol), x => x.cast("double")))
-      .withColumn("_qn", norm(col("_vq"), dim))
-      .withColumn("centroid_id", -array_max(array(scored: _*)).getField("nid"))
-      .drop("_vq", "_qn")
-  }
-
   /** Deterministic mean-pooling of embeddings per group — the pass
     * that turns chunk/frame embeddings into one document vector. A
     * plain per-dimension mean sums doubles in partition order and is
@@ -646,9 +600,8 @@ object Similarity {
         (sum(col("micro")).cast("double") / (count(lit(1)) * 1e6)).as("mean_v"))
 
   /** Embedding distribution drift between two corpus snapshots — the
-    * re-index trigger's other half: [[graft.streaming.VectorStreamOps]]
-    * watches posting-list LOADS live; this audits the underlying
-    * DISTRIBUTION shift per (group, dimension) between the snapshot an
+    * re-index trigger's other half: [[Profile.rebuildDecision]] watches
+    * posting-list LOADS; this audits the underlying DISTRIBUTION shift per (group, dimension) between the snapshot an
     * index was trained on and the corpus it now serves.
     *
     * Exactness: both sides pool through [[meanPool]]'s micro-quantized

@@ -663,7 +663,10 @@ object TextStats {
         posexplode(lines).as(Seq("pos", "line")))
       .select(col("doc_id"), col("pos"), md5(col("line")).as("h"))
       .localCheckpoint() // feeds the common-line count AND the position map
-    val common = commonFromExploded(ldf, minDocs)
+    val common = ldf.groupBy("h")
+      .agg(count_distinct(col("doc_id")).as("nd"))
+      .filter(col("nd") >= minDocs)
+      .select("h")
     val drops = ldf.join(broadcast(common), Seq("h"), "left_semi")
       .groupBy("doc_id")
       .agg(collect_list(col("pos")).as("drop_pos"))
@@ -681,47 +684,6 @@ object TextStats {
               !array_contains(coalesce(col("drop_pos"),
                 array().cast("array<int>")), i)),
             "\n")).as("clean_text"))
-  }
-
-  private def commonFromExploded(ldf: DataFrame, minDocs: Int): DataFrame =
-    ldf.groupBy("h")
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs)
-      .select("h")
-
-  /** The frozen common-line artifact for the LIVE ingest gate
-    * ([[graft.streaming.EventStreamOps.streamingBoilerplateScrub]]):
-    * the md5s of every line occurring in >= `minDocs` distinct docs of
-    * the reference corpus, collected to the driver. Bounded by
-    * boilerplate CARDINALITY (high-frequency, low-cardinality — that
-    * is what makes it boilerplate), the same smallness argument the
-    * batch op's broadcast rests on; refresh offline, ship to the
-    * stream as a literal. The smallness premise is ENFORCED, not just
-    * argued (the [[Dedup]] union-find discipline): the collect is
-    * capped at `maxHashes + 1` rows plan-side, and overflow throws
-    * with the remediation instead of flooding the driver.
-    */
-  def commonLineHashes(docs: DataFrame, minDocs: Int = 2,
-                       idCol: String = "doc_id",
-                       textCol: String = "text",
-                       maxHashes: Int = 1 << 20): Array[String] = {
-    require(minDocs >= 2, "minDocs must be >= 2")
-    require(maxHashes >= 1, s"maxHashes must be >= 1, got $maxHashes")
-    val got = commonFromExploded(
-      docs.filter(col(textCol).isNotNull)
-        .select(col(idCol).as("doc_id"),
-          posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
-        .select(col("doc_id"), md5(col("line")).as("h")),
-      minDocs)
-      .orderBy("h").limit(maxHashes + 1).collect().map(_.getString(0))
-    if (got.length > maxHashes)
-      throw new IllegalArgumentException(
-        s"commonLineHashes: more than $maxHashes distinct common lines " +
-          s"at minDocs=$minDocs — this corpus's repeated lines are not " +
-          "low-cardinality boilerplate; raise minDocs (a higher bar IS " +
-          "the boilerplate definition), or raise maxHashes if the " +
-          "driver and the streaming broadcast can hold the set")
-    got
   }
 
   /** Exact duplicated-span REMOVAL — the cleanup step behind the
@@ -1757,13 +1719,10 @@ object TextStats {
       .withColumn("logw", col("sum_lrq").cast("double") / 10000)
   }
 
-  /** DSIR hashed-gram bucket ids as one array expression — the shared
-    * feature definition behind [[importanceWeights]] (batch),
-    * [[importanceRatioTable]] (table build), and
-    * [[importanceScoreColumns]] (serving/streaming): unigrams+bigrams
+  /** DSIR hashed-gram bucket ids as one array expression — the
+    * feature definition behind [[importanceWeights]]: unigrams+bigrams
     * of the length-filtered token list, each md5-bucketed into
-    * `buckets` slots. One definition, so a scorer can never hash
-    * differently from the table it scores against.
+    * `buckets` slots.
     */
   private[graft] def gramBuckets(textCol: String, buckets: Int): Column =
     graft.functions.GramBucketIds(tokens(col(textCol)), buckets)
@@ -1781,40 +1740,6 @@ object TextStats {
       .otherwise(array().cast("array<string>"))
     transform(concat(ts, bi),
       g => conv(substring(md5(g), 1, 4), 16, 10).cast("long") % buckets)
-  }
-
-  /** The DSIR log-ratio MODEL as a dense serving table: quantized
-    * `floor(ln(p_t(b)/p_r(b))*10000)` for EVERY bucket 0..B-1 — the
-    * batch scorer only needs raw-present buckets, but a scorer serving
-    * unseen documents (a stream) hashes into buckets the raw corpus
-    * never touched, so the table must cover the full domain (absent
-    * buckets fall back to the smoothing floor on both distributions).
-    * Same integer-product / Math.log arithmetic as
-    * [[importanceWeights]]'s expression path, so table scores are
-    * bit-identical to batch scores for any doc the batch path covers.
-    *
-    * Driver-side by design: two B-row aggregations collect (bounded by
-    * `buckets`, the vocab-probe tier of justified collects) and the
-    * B-entry array rides the plan as a literal — scoring then needs no
-    * join at all ([[qualityClassifier]]'s model-in-plan move).
-    */
-  def importanceRatioTable(raw: DataFrame, target: DataFrame,
-                           buckets: Int = 1024,
-                           textCol: String = "text"): Array[Long] = {
-    require(buckets >= 1, "buckets must be >= 1")
-    def counts(df: DataFrame): Map[Int, Long] =
-      df.select(explode(gramBuckets(textCol, buckets)).as("b"))
-        .groupBy("b").agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-    val cr = counts(raw)
-    val ct = counts(target)
-    val totR = cr.values.sum
-    val totT = ct.values.sum
-    Array.tabulate(buckets) { b =>
-      val num = ((ct.getOrElse(b, 0L) + 1) * (totR + buckets)).toDouble
-      val den = ((cr.getOrElse(b, 0L) + 1) * (totT + buckets)).toDouble
-      math.floor(math.log(num / den) * 10000).toLong
-    }
   }
 
   /** TRAINED hashed linear probe — gradient-descent training as a
@@ -1888,28 +1813,6 @@ object TextStats {
     w.zipWithIndex
       .map { case (wq, b) => (b, wq, wq.toDouble / (1L << 20)) }
       .toSeq.toDF("b", "w_q", "w")
-  }
-
-  /** Stateless DSIR scoring columns off a [[importanceRatioTable]]:
-    * (n_grams, sum_lrq, logw) as PURE expressions — the table is a
-    * plan literal (`element_at` lookup), the per-doc sum folds the
-    * gram array left-to-right in exact longs, and nothing shuffles or
-    * joins: scoring a 100 TB stream (or lake) is an embarrassingly
-    * parallel map. Differences from the batch scorer, by contract:
-    * gram-less docs score (0, 0, 0.0) here (a filter drops them where
-    * the batch path emits nothing), and null text scores nulls.
-    */
-  def importanceScoreColumns(table: Array[Long],
-                             textCol: String = "text"): Seq[Column] = {
-    require(table.nonEmpty, "ratio table must be non-empty")
-    val w = typedLit(table.toSeq)
-    val bks = gramBuckets(textCol, table.length)
-    val sumLrq = aggregate(
-      transform(bks, b => element_at(w, (b + 1).cast("int"))),
-      lit(0L), (acc, x) => acc + x)
-    Seq(size(bks).cast("long").as("n_grams"),
-      sumLrq.as("sum_lrq"),
-      (sumLrq.cast("double") / 10000).as("logw"))
   }
 
   /** Content-defined chunking at token granularity — the

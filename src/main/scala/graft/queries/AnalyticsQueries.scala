@@ -150,8 +150,7 @@ object AnalyticsQueries {
 
   /** Last-touch click attribution: every click joins its user's views
     * inside the preceding `windowUs` (a time-BOUNDED equi+range join —
-    * the bound is what makes the streaming twin's state finite,
-    * [[graft.streaming.EventStreamOps.streamingAttribution]]), then
+    * the bound is what keeps q_attr_stream's state finite), then
     * the LATEST qualifying view wins (ties by highest view id —
     * deterministic). `gap_us` is the click−view lag the attribution
     * report plots. Integer-µs time math end to end.

@@ -2524,10 +2524,8 @@ object ExtensionQueries {
   def abBootstrapQ(s: SparkSession, d: String): DataFrame =
     abBootstrap(Tables.events(s, d))
 
-  /** Batch SPRT replay — what Wald's sequential test
-    * ([[graft.streaming.EventStreamOps.streamingSprt]], same pinned
-    * micro-nat constants) WOULD have decided over the recorded
-    * stream, per event type: the LLR needs no recursion because
+  /** Batch SPRT replay — what Wald's sequential test WOULD have
+    * decided over the recorded stream, per event type: the LLR needs no recursion because
     * `llr_n = hits_n·H + (n − hits_n)·M` is a pure function of the
     * cumulative hit count. Event types are FEW and HUGE, so a
     * per-type ordered window would sort every event of a type on one
@@ -4384,10 +4382,7 @@ object ExtensionQueries {
 
   /** Batch JSON payload key census — per event type, which keys the
     * `props` payloads actually carry and in what share of that type's
-    * events: the table the live schema-drift detector's frozen
-    * allowlist is REFRESHED from (one definition feeding the live
-    * tripwire's artifact, the boilerplate-scrub discipline). One
-    * explode of the parsed key array + one (type, key) hash-agg; the
+    * events. One explode of the parsed key array + one (type, key) hash-agg; the
     * per-type event totals broadcast back for exact share ppm.
     */
   def jsonKeysQ(s: SparkSession, d: String): DataFrame = {
@@ -4517,9 +4512,7 @@ object ExtensionQueries {
     * q_ann_ivf* queries and q_ivf_health read — size skew from the
     * index, probe traffic from the odd-vec_id half of the corpus (the
     * same base/current split q_embed_drift uses as its batch stand-in
-    * for live traffic), one action per posting list. The streaming
-    * twin feeds [[graft.streaming.VectorStreamOps.streamingListLoads]]
-    * windows into the same decision join.
+    * for live traffic), one action per posting list.
     */
   def ivfRebuild(s: SparkSession, d: String): DataFrame = {
     val assign = ivfAssignment(s, d)
@@ -6460,8 +6453,8 @@ object ExtensionQueries {
     psi(ev.select(col("event_type"),
       floor(AnalyticsQueries.epochUs(ev, "ts") / lit(86400000000L))
         .cast("long").as("day"),
-      // clamped at BOTH ends: a negative value must land in bucket 0
-      // (the streaming twin's rule), not fall out of the 0..9 grid
+      // clamped at BOTH ends: a negative value must land in bucket 0,
+      // not fall out of the 0..9 grid
       // join while still counting in n_ref/n_cur
       expr("greatest(least(CAST(floor(value * 1000) AS BIGINT) div 25000, 9L), 0L)")
         .as("bucket")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 
 /** LRU memo of materialized (localCheckpoint'd) DataFrames — the
   * materialized-view registry a long-lived session keeps for shared
@@ -54,10 +54,9 @@ object FrameMemo {
   private[queries] def record(key: String, secs: Double): Unit =
     log.add((key, secs, Option(currentConsumer.get).getOrElse("")))
 
-  // Registry of checkpoint-RDD ids the memos own — the harness's
-  // block-hygiene sweep (Bench/Verify free invocation-local checkpoint
-  // blocks after each query window) consults it so a memo built INSIDE
-  // a timed window (straggler past the prewarm) is never unpersisted
+  // Registry of checkpoint-RDD ids the memos own — the per-query sweep
+  // ([[withInvocationCheckpoints]]) consults it so a memo built INSIDE
+  // a query's window (straggler past the prewarm) is never unpersisted
   // out from under its later consumers.
   private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
@@ -78,6 +77,35 @@ object FrameMemo {
     owned.forEach(id => b += id)
     b.result()
   }
+
+  /** Run one query invocation, then free every persistent RDD it
+    * created except the frames the memos own ([[ownedRddIds]]).
+    * Invocation-local `localCheckpoint` blocks are reachable only
+    * through the frames that invocation built; left persisted, a run
+    * of 320 queries piles them up in the block manager and the heap
+    * until a full GC lands a multi-second pause on a later query. The
+    * sweep runs after `body` returns or throws, outside any timing
+    * `body` does, so it blocks until the blocks are gone.
+    */
+  def withInvocationCheckpoints[T](spark: SparkSession)(body: => T): T = {
+    quietCheckpointUnpersist
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally {
+      val keep = ownedRddIds
+      for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
+           if !before.contains(id) && !keep.contains(id))
+        rdd.unpersist(blocking = true)
+    }
+  }
+
+  // each unpersisted localCheckpoint RDD logs a "lineage has been
+  // truncated" WARN — benign here (the frame's consumer has fully
+  // materialized) and, at one line per checkpoint per query, enough to
+  // crowd the stdout tail a harness's result line must survive in
+  private lazy val quietCheckpointUnpersist: Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
 
   /** (memo key, build seconds, consumer query) per ACTUAL build, in
     * build order, across every FrameMemo instance in the session.

@@ -75,8 +75,15 @@ object AuditSource {
     * concurrent-writer contract (it deletes only at-or-below its
     * probed max; its 100-row incremental batching is MySQL-politeness,
     * not semantics). Returns rows deleted; an empty table no-ops.
+    *
+    * `delivered` is the sink's watermark read AFTER the sync
+    * ([[graft.core.SyncJob.watermark]]): only rows at or below it are
+    * deleted. A row committed between the sync's snapshot and the
+    * probe sits below the probed max but above `delivered`, so it
+    * survives until a later sync delivers it.
     */
   def wipeJdbcAudit(conn: java.sql.Connection, quotedTable: String,
+                    delivered: Long,
                     pkCol: String = AuditSchema.PkCol,
                     maxAgeSec: Option[Long] = None,
                     tsCol: String = AuditSchema.TimestampCol): Long = {
@@ -105,7 +112,7 @@ object AuditSource {
       else maxAgeSec match {
         case None =>
           st.executeUpdate(
-            s"DELETE FROM $quotedTable WHERE $pk < $maxPk").toLong
+            s"DELETE FROM $quotedTable WHERE $pk < $maxPk AND $pk <= $delivered").toLong
         // all-null timestamps (maxTs == null) leave no age bound to
         // compute. FAIL SAFE: delete nothing. The normal age branch
         // preserves NULL-ts rows (ts < cutoff is UNKNOWN), so one
@@ -121,7 +128,8 @@ object AuditSource {
           // the bounded probe-then-delete (concurrent writes survive)
           val cutoff = new java.sql.Timestamp(maxTs.getTime - age * 1000L)
           val ps = conn.prepareStatement(
-            s"DELETE FROM $quotedTable WHERE $pk < $maxPk AND $q$tsCol$q < ?")
+            s"DELETE FROM $quotedTable WHERE $pk < $maxPk AND $pk <= $delivered " +
+              s"AND $q$tsCol$q < ?")
           try { ps.setTimestamp(1, cutoff); ps.executeUpdate().toLong }
           finally ps.close()
       }

@@ -4,8 +4,8 @@ import graft.ops.Inference
 import org.apache.spark.sql.Dataset
 
 /** Live batched model serving — the streaming twin of
-  * [[graft.ops.Inference.inferBatched]], in the same stateless typed
-  * `mapPartitions` shape as [[MediaStreamOps]]: each micro-batch's
+  * [[graft.ops.Inference.inferBatched]], as a stateless typed
+  * `mapPartitions`: each micro-batch's
   * partitions pack arriving docs into fixed-size forward batches (one
   * session call per batch — the GPU-amortization shape survives the
   * move to streaming because batching happens WITHIN the partition

@@ -78,13 +78,7 @@ object Cli {
     */
   private[tools] def session(): (SparkSession, Boolean) = {
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.Harness.builder(graft.Harness.cpus, graft.Harness.cpus)
       .getOrCreate()
     (s, !preexisting)
   }
@@ -412,10 +406,10 @@ object CurateTool {
   * into the remote WHERE ([[AuditSource.jdbcAbove]]), the reference's
   * exact `audit_pk > :wm` range scan. `-w` wipes the source to its
   * newest row — parquet log compaction, or the reference's bounded
-  * concurrent-writer-safe DELETE on the live table
-  * ([[AuditSource.wipeJdbcAudit]]).
+  * concurrent-writer-safe DELETE on the live table, bounded by the
+  * sink's delivered watermark ([[AuditSource.wipeJdbcAudit]]).
   * `--par N` submits up to N tables' Spark jobs CONCURRENTLY (the
-  * [[graft.core.SyncJob.syncAll]] pool) — per-table work shares no
+  * [[graft.core.SyncJob.forEachTable]] pool) — per-table work shares no
   * state (own sink dir, own watermark sidecar), so a cluster with
   * idle executors overlaps the scans instead of draining them one at
   * a time. Every table runs to completion even when a sibling fails;
@@ -483,8 +477,11 @@ object SyncTool {
           if (wipe) {
             val ageSec = opts.get("--wipe-age-sec").filter(_ != "true")
               .map(_.toLong)
-            val gone = withConn(
-              AuditSource.wipeJdbcAudit(_, quoted, maxAgeSec = ageSec))
+            // bound the wipe by what the sink holds: rows committed
+            // after the sync's snapshot stay for the next sync
+            val delivered = SyncJob.watermark(spark, sink)
+            val gone = withConn(AuditSource.wipeJdbcAudit(_, quoted,
+              delivered, maxAgeSec = ageSec))
             log.warn(s"[sync] $t: delivered $d rows, " +
               s"wiped $gone delivered row(s) from the live table")
           } else log.warn(s"[sync] $t: delivered $d rows")
@@ -501,24 +498,7 @@ object SyncTool {
             log.warn(s"[sync] $t: delivered $d rows")
           }
       }
-      if (par <= 1 || tables.size <= 1) tables.foreach(one)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(par, tables.size))
-        try {
-          val futs = tables.map(t => pool.submit(
-            new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = one(t)
-            }))
-          val results = futs.map(f => scala.util.Try(f.get()))
-          results.collectFirst {
-            case scala.util.Failure(e: java.util.concurrent.ExecutionException) =>
-              throw e.getCause
-            case scala.util.Failure(e) => throw e
-          }
-          ()
-        } finally pool.shutdown()
-      }
+      SyncJob.forEachTable(tables, math.max(1, par))(one)
     } finally {
       if (owned) spark.stop()
       log.close()

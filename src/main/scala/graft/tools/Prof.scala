@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev-only stage profiler — round 12 edition: decomposes the scale
@@ -18,14 +17,7 @@ object Prof {
     val d1 = args.headOption.getOrElse("/root/testdata/sf0.1")
     val d2 = if (args.length > 1) args(1) else "/tmp/graft_scale2"
     val d8 = if (args.length > 2) args(2) else "/tmp/graft_scale8"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-prof")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Harness.builder(32, 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftExtensions.register(spark)
     ScaleProbe.buildStressed(spark, d1, d2, 2)

@@ -157,19 +157,13 @@ object ScaleProbe {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale8"
     val factor = if (args.length > 2) args(2).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Harness.cpus
     // SPARK_GRAFT_SHUFFLE overrides the shuffle-partition count — the
     // knob a real cluster sizes with the data (at ×N the per-partition
     // row count grows ×N on a fixed count; sort/spill costs then grow
     // superlinearly — this lets the probe MEASURE that attribution)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val shuffle = sys.env.get("SPARK_GRAFT_SHUFFLE").fold(cpus)(_.toInt)
+    val spark = graft.Harness.builder(cpus, shuffle).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     buildStressed(spark, sfDir, outDir, factor)
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -58,6 +58,17 @@ class ArtifactsAndWipeSpec extends SparkSpec {
     assert(after.toSeq === Seq(50L))
   }
 
+  test("wipeLogDir on a partitioned log throws instead of silently " +
+    "wiping nothing, and leaves every partition file in place") {
+    val dir = tmpDir("plog")
+    val log = spark.read.parquet(mkLogDir(1 to 6))
+      .withColumn("dt", when(col("id") <= 3, "d1").otherwise("d2"))
+    graft.core.AuditLake.writePartitionedLog(log, dir, "dt")
+    val e = intercept[IllegalArgumentException](SyncJob.wipeLogDir(spark, dir))
+    assert(e.getMessage.contains("partitioned"), e.getMessage)
+    assert(spark.read.parquet(dir).count() === 6L)
+  }
+
   test("wipeLogDir keeps a file appended concurrently with the wipe " +
     "(reference's bounded delete: live trigger writes survive, sync:267-283)") {
     val dir = mkLogDir(1 to 30)

@@ -169,40 +169,6 @@ class ExperimentSpec extends SparkSpec {
     assert(t._2 === 0L)  // test days 21..30 all exceed it
   }
 
-  test("streamingDrawdown == batch drawdown summary over the same " +
-    "prefix, across batch boundaries, with a sticky first alarm") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{DdEv, DdOut}
-    implicit val sc = spark.sqlContext
-    val series = Seq(100L, 50L, 200L, 20L, 300L, 299L)
-    val mem = MemoryStream[DdEv]
-    val q = EventStreamOps.streamingDrawdown(mem.toDS())
-      .writeStream.format("memory").queryName("ddlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest = spark.table("ddlive").as[DdOut].collect().last
-      def batchOver(n: Int) = ExtensionQueries.drawdown(
-          series.take(n).zipWithIndex
-            .map { case (v, i) => ("t", i.toLong, i.toLong * 10, v) }
-            .toDF("event_type", "event_id", "ts_us", "v"))
-        .select("n_total", "max_dd_ppm", "first_alarm_n")
-        .as[(Long, Long, Long)].head()
-      mem.addData(series.take(3).zipWithIndex.map { case (v, i) =>
-        DdEv("t", i.toLong, v) }: _*)
-      q.processAllAvailable()
-      val mid = latest
-      assert((mid.nObs, mid.maxDdPpm, mid.firstAlarmN) === batchOver(3))
-      mem.addData(series.drop(3).zipWithIndex.map { case (v, i) =>
-        DdEv("t", (i + 3).toLong, v) }: _*)
-      q.processAllAvailable()
-      val fin = latest
-      assert((fin.nObs, fin.maxDdPpm, fin.firstAlarmN) === batchOver(6))
-      assert(fin.firstAlarmN === 2L) // sticky: still the first crossing
-    } finally q.stop()
-  }
-
   test("banditReplay: greedy follows the leader — sticks with the " +
     "early winner, switches only after the log overtakes it, and the " +
     "hindsight regret is the hand-computed 100000 ppm") {
@@ -376,55 +342,6 @@ class ExperimentSpec extends SparkSpec {
       .filter(col("scope") =!= "all")
       .select("scope", "mean_cos_ppm").as[(String, Long)].collect().toMap
     assert(byLabel("label:0") === 1000000L && byLabel("label:1") === 0L)
-  }
-
-  test("streamingGroupSeq == batch groupSeq look-for-look across " +
-    "batch boundaries and a day gap; emission freezes at the first " +
-    "crossing exactly as the batch stop_look") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{GsEv, GsOut}
-    implicit val sc = spark.sqlContext
-    // null effect first, big effect from day 6 on; day 4 is silent
-    // (a look cutoff falls inside the gap) — horizon = observed span
-    def dayRow(dd: Long): (Long, Long, Long, Long) =
-      if (dd == 4L) (0L, 0L, 0L, 0L)
-      else if (dd <= 5L) (50L, 10L, 50L, 10L)
-      else (50L, 40L, 50L, 5L)
-    val days = (0L to 9L).filter(_ != 4L)
-    val batchIn = days.flatMap { dd =>
-      val (da, dha, db, dhb) = dayRow(dd)
-      (0 until da.toInt).map(i => ("t", dd, 1L, if (i < dha) 1L else 0L)) ++
-        (0 until db.toInt).map(i => ("t", dd, 0L, if (i < dhb) 1L else 0L))
-    }.toDF("event_type", "day", "ga", "hit")
-    val batch = ExtensionQueries.groupSeq(batchIn)
-      .select("look", "n_a", "hits_a", "n_b", "hits_b", "z2_milli",
-        "bound_milli", "crossed", "stop_look")
-      .as[(Long, Long, Long, Long, Long, Long, Long, Boolean, Long)]
-      .collect().sortBy(_._1)
-    val stopLook = batch.head._9
-    val expected = batch
-      .filter(r => stopLook == 0L || r._1 <= stopLook)
-      .map(r => (r._1, r._2, r._3, r._4, r._5, r._6, r._7, r._8)).toSeq
-
-    val mem = MemoryStream[GsEv]
-    val q = EventStreamOps.streamingGroupSeq(mem.toDS(), horizonDays = 10L)
-      .writeStream.format("memory").queryName("gslive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def ev(dd: Long) = { val (da, dha, db, dhb) = dayRow(dd)
-        GsEv("t", dd, da, dha, db, dhb) }
-      mem.addData(days.filter(_ <= 5L).map(ev): _*)
-      q.processAllAvailable()
-      mem.addData(days.filter(_ > 5L).map(ev): _*)
-      q.processAllAvailable()
-      val live = spark.table("gslive").as[GsOut].collect()
-        .sortBy(_.look)
-        .map(r => (r.look, r.nA, r.hitsA, r.nB, r.hitsB, r.z2Milli,
-          r.boundMilli, r.crossed)).toSeq
-      assert(live === expected, s"live=$live expected=$expected")
-    } finally q.stop()
   }
 
   test("ips: on the bandit fixture the IPS and SNIPS values equal the " +
@@ -918,81 +835,5 @@ class ExperimentSpec extends SparkSpec {
     // b: (|3-3|-1 -> 0)^2 = 0; s: (|20-2|-1)^2*1000 div 22 = 13136
     assert(out === Seq(("b", 10L, 3L, 3L, 0L, false),
       ("s", 22L, 20L, 2L, 13136L, true)))
-  }
-
-  test("streamingCochranArmitage == batch cochranArmitage verdict " +
-    "over the same day prefix, across batch boundaries") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{CaEv, CaOut}
-    implicit val sc = spark.sqlContext
-    def batchOver(days: Int) = ExtensionQueries.cochranArmitage(
-        (0 until days).flatMap { dd =>
-          (0 until 10).map(i => ("t", dd.toLong,
-            if (i < dd) 1L else 0L))
-        }.toDF("event_type", "day", "hit"))
-      .select("n_total", "hits", "z2_milli", "direction", "significant")
-      .as[(Long, Long, Long, String, Boolean)].head()
-    val mem = MemoryStream[CaEv]
-    val q = EventStreamOps.streamingCochranArmitage(mem.toDS())
-      .writeStream.format("memory").queryName("calive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest = spark.table("calive").as[CaOut].collect()
-        .maxBy(_.day)
-      mem.addData((0 until 5).map(dd =>
-        CaEv("t", dd.toLong, 10L, dd.toLong)): _*)
-      q.processAllAvailable()
-      val mid = latest
-      assert((mid.nTotal, mid.hits, mid.z2Milli, mid.direction,
-        mid.significant) === batchOver(5))
-      mem.addData((5 until 10).map(dd =>
-        CaEv("t", dd.toLong, 10L, dd.toLong)): _*)
-      q.processAllAvailable()
-      val fin = latest
-      assert((fin.nTotal, fin.hits, fin.z2Milli, fin.direction,
-        fin.significant) === batchOver(10))
-      assert(fin.z2Milli === 33333L && fin.direction === "up")
-    } finally q.stop()
-  }
-
-  test("streamingMantelHaenszel == batch over closed-day strata: the " +
-    "single-stratum prefix is unconfounded, the full Simpson pair " +
-    "fires, day-close honored across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{MhEv, MhOut}
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[MhEv]
-    val q = EventStreamOps.streamingMantelHaenszel(mem.toDS())
-      .writeStream.format("memory").queryName("mhlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def rows = spark.table("mhlive").as[MhOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-      // stratum day 0: A 90/100, B 9/10 — arm cells split across
-      // batches; nothing may emit until day 1 arrives
-      mem.addData(MhEv("s", 0L, 1L, 100L, 90L))
-      q.processAllAvailable()
-      assert(rows.isEmpty, "an open stratum must not emit")
-      mem.addData(MhEv("s", 0L, 0L, 10L, 9L),
-        MhEv("s", 1L, 1L, 10L, 1L))
-      q.processAllAvailable()
-      val d0 = rows
-      assert(d0.map(o => (o.day, o.nStrata, o.crudeOrMilli,
-        o.mhOrMilli, o.confounded)) ===
-        Seq((0L, 1L, 1000L, 1000L, false)))
-      // complete stratum day 1 (A 1/10, B 10/100), then a day-2 tick
-      // closes it: the full Simpson verdict
-      mem.addData(MhEv("s", 1L, 0L, 100L, 10L),
-        MhEv("s", 2L, 1L, 1L, 0L))
-      q.processAllAvailable()
-      val all = rows.map(o => (o.day, o.nStrata, o.crudeOrMilli,
-        o.mhOrMilli, o.confounded))
-      assert(all === Seq((0L, 1L, 1000L, 1000L, false),
-        (1L, 2L, 22939L, 1000L, true)))
-    } finally q.stop()
   }
 }

@@ -150,4 +150,27 @@ class FrameMemoSpec extends SparkSpec {
     assert(ExtensionQueries.sharedBuildCount === c1,
       "the resample must reuse the memoized weight frame")
   }
+
+  test("withInvocationCheckpoints: after N queries the persistent RDDs " +
+    "grown in the session are exactly the memo-owned frames, even when " +
+    "a query throws") {
+    val memo = new FrameMemo[String](bound = 8)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 1 to 6) FrameMemo.withInvocationCheckpoints(spark) {
+      // one invocation-local checkpoint and one shared memo frame
+      val local = spark.range(100).selectExpr(s"id * $i AS v")
+        .localCheckpoint()
+      val shared = memo(s"k${i % 2}")(spark.range(50).toDF("v"))
+      assert(local.union(shared).count() === 150L)
+    }
+    intercept[IllegalStateException](
+      FrameMemo.withInvocationCheckpoints(spark) {
+        spark.range(10).localCheckpoint()
+        throw new IllegalStateException("query failed")
+      })
+    val grown = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(grown.size === 2, grown)
+    assert(grown.subsetOf(FrameMemo.ownedRddIds))
+    memo.clear()
+  }
 }

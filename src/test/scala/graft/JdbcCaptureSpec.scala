@@ -87,6 +87,32 @@ class JdbcCaptureSpec extends SparkSpec {
     assert(sinkPks(sink) === (1L to 15L))
   }
 
+  test("wipeJdbcAudit bounded by the delivered watermark: rows " +
+    "committed after the sync survive the wipe, and the next sync " +
+    "delivers each of them exactly once") {
+    val tbl = "\"race_audit\""
+    withConn(_.createStatement().execute(
+      s"""CREATE TABLE $tbl ("id" INT, "audit_pk" BIGINT)"""))
+    def insert(pks: Range): Unit = withConn { c =>
+      val ps = c.prepareStatement(s"INSERT INTO $tbl VALUES (?, ?)")
+      pks.foreach { i => ps.setInt(1, i); ps.setLong(2, i.toLong); ps.addBatch() }
+      ps.executeBatch()
+    }
+    val sink = tmpDir("race_sink")
+    def sync(): Long =
+      SyncJob.syncTable(spark, spark.read.jdbc(url, tbl, props), sink)
+    insert(1 to 5)
+    assert(sync() === 5L)
+    // committed between the sync's snapshot and the wipe's MAX probe
+    insert(6 to 8)
+    val delivered = SyncJob.watermark(spark, sink)
+    assert(delivered === 5L)
+    assert(withConn(AuditSource.wipeJdbcAudit(_, tbl, delivered)) === 5L)
+    assert(sync() === 3L)
+    assert(sync() === 0L)
+    assert(sinkPks(sink) === (1L to 8L))
+  }
+
   test("resident poller delivers across micro-batches and resumes " +
     "exactly-once after a restart (even with a FRESH checkpoint)") {
     val sink = tmpDir("jdbc_sink2")
@@ -227,7 +253,7 @@ class JdbcCaptureSpec extends SparkSpec {
       }
       ps.executeBatch()
       // newest ts = 06:00; 2h window keeps >= 04:00 -> pks 4,5,6
-      val gone = AuditSource.wipeJdbcAudit(c, "\"aged_audit\"",
+      val gone = AuditSource.wipeJdbcAudit(c, "\"aged_audit\"", Long.MaxValue,
         maxAgeSec = Some(2L * 3600L))
       assert(gone === 3L)
       val rs = c.createStatement().executeQuery(
@@ -247,7 +273,7 @@ class JdbcCaptureSpec extends SparkSpec {
         ps.setInt(1, i); ps.setLong(2, i.toLong); ps.addBatch()
       }
       ps.executeBatch()
-      assert(AuditSource.wipeJdbcAudit(c, "\"nots_audit\"") === 3L)
+      assert(AuditSource.wipeJdbcAudit(c, "\"nots_audit\"", Long.MaxValue) === 3L)
       val rs = c.createStatement().executeQuery(
         """SELECT "audit_pk" FROM "nots_audit"""")
       val left = Iterator.continually(rs).takeWhile(_.next())
@@ -267,7 +293,7 @@ class JdbcCaptureSpec extends SparkSpec {
       c.createStatement().executeUpdate(
         """INSERT INTO "nullts_audit" VALUES
           | (1, NULL, 1), (2, NULL, 2), (3, NULL, 3)""".stripMargin)
-      assert(AuditSource.wipeJdbcAudit(c, "\"nullts_audit\"",
+      assert(AuditSource.wipeJdbcAudit(c, "\"nullts_audit\"", Long.MaxValue,
         maxAgeSec = Some(3600L)) === 0L)
       val rs = c.createStatement().executeQuery(
         """SELECT "audit_pk" FROM "nullts_audit"""")
@@ -280,7 +306,7 @@ class JdbcCaptureSpec extends SparkSpec {
       c.createStatement().executeUpdate(
         """INSERT INTO "nullts_audit" VALUES
           | (4, TIMESTAMP('2020-01-01 06:00:00'), 4)""".stripMargin)
-      assert(AuditSource.wipeJdbcAudit(c, "\"nullts_audit\"",
+      assert(AuditSource.wipeJdbcAudit(c, "\"nullts_audit\"", Long.MaxValue,
         maxAgeSec = Some(3600L)) === 0L,
         "NULL-ts rows survive the age predicate (UNKNOWN)")
     }

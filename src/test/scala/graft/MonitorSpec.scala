@@ -14,80 +14,6 @@ class MonitorSpec extends SparkSpec {
 
   private val day = 86400000000L
 
-  test("out-of-order replay property: any delivery respecting the " +
-    "append-only day contract (arbitrary in-batch order, any per-key " +
-    "monotone batch split) replays the CUSUM / Page-Hinkley / " +
-    "Holt-Winters twins bit-identically; a day arriving after a LATER " +
-    "day was already applied is dropped, never re-opened") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.CcEv
-    import org.apache.spark.sql.{Dataset, Encoder}
-    implicit val sc = spark.sqlContext
-    var qn = 0
-    // run one twin over a delivery schedule; normalized emitted rows
-    def run[O: Encoder](mk: Dataset[CcEv] => Dataset[O],
-                        batches: Seq[Seq[CcEv]]): Seq[String] = {
-      qn += 1
-      val name = s"oooprop$qn"
-      val mem = MemoryStream[CcEv]
-      val q = mk(mem.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update()).start()
-      try {
-        batches.foreach { b =>
-          if (b.nonEmpty) { mem.addData(b: _*); q.processAllAvailable() }
-        }
-        spark.table(name).collect().map(_.toString).sorted.toSeq
-      } finally q.stop()
-    }
-    for (seed <- Seq(7, 41); twin <- 0 until 3) {
-      val rnd = new scala.util.Random(seed * 10 + twin)
-      // random per-key day series with gaps (the zero-fill path stays
-      // exercised); days delivered at most once per key
-      val series: Map[String, Seq[CcEv]] = Seq("a", "b").map { k =>
-        k -> (0 to 8).flatMap { d =>
-          if (rnd.nextInt(4) == 0) None
-          else Some(CcEv(k, d.toLong, rnd.nextInt(10).toLong))
-        }
-      }.toMap
-      val inOrder = Seq(series.values.flatten.toSeq.sortBy(e => (e.key, e.day)))
-      // per-key contiguous chunks in day order -> chunk i lands in
-      // batch i (monotone per key); batches internally shuffled
-      val chunked: Map[String, Seq[Seq[CcEv]]] = series.map { case (k, es) =>
-        k -> {
-          val cuts = es.indices.drop(1).filter(_ => rnd.nextBoolean())
-          val bounds = (0 +: cuts) :+ es.length
-          bounds.sliding(2).map { case Seq(a, b) => es.slice(a, b) }.toSeq
-        }
-      }
-      val nB = chunked.values.map(_.length).max
-      val shuffled = (0 until nB).map { i =>
-        rnd.shuffle(chunked.values.flatMap(c =>
-          if (i < c.length) c(i) else Nil).toSeq)
-      }
-      def exec(i: Int, sched: Seq[Seq[CcEv]]): Seq[String] = i match {
-        case 0 => run(ds => EventStreamOps.streamingCusum(ds,
-          targetMilli = 5000L, slackMilli = 1000L, hMilli = 8000L), sched)
-        case 1 => run(ds => EventStreamOps.streamingPageHinkley(ds,
-          deltaMilli = 500L, lambdaMilli = 6000L), sched)
-        case _ => run(ds => EventStreamOps.streamingHoltWinters(ds), sched)
-      }
-      assert(exec(twin, inOrder) === exec(twin, shuffled),
-        s"seed=$seed twin=$twin series=$series shuffled=$shuffled")
-    }
-    // past the watermark: once day 5 is APPLIED (zero-filling 3..4),
-    // a real day-3 row arriving later emits nothing and leaves the
-    // zero-filled trajectory in place — the documented append-only
-    // drop, NOT a re-open
-    def exec2(sched: Seq[Seq[CcEv]]): Seq[String] =
-      run(ds => EventStreamOps.streamingCusum(ds, targetMilli = 5000L,
-        slackMilli = 1000L, hMilli = 8000L), sched)
-    val early = Seq(Seq(CcEv("m", 0L, 4L), CcEv("m", 5L, 4L)))
-    val late = early :+ Seq(CcEv("m", 3L, 9L))
-    assert(exec2(early) === exec2(late))
-  }
-
   test("ewmaDaily: hand-checked recurrence with a silent-day zero fill " +
     "and a spike flag judged against the PRIOR baseline") {
     // key a: day 0 -> 2 events, day 1 silent, day 2 -> 12 events
@@ -209,222 +135,6 @@ class MonitorSpec extends SparkSpec {
       .as[(Long, Boolean, Boolean)].collect().toSeq
     assert(o2.forall(r => !r._2), "a drop must never trip the UP side")
     assert(o2.exists(_._3), s"the silent run must trip ph_down: $o2")
-  }
-
-  test("streamingPageHinkley == batch pageHinkleyDaily trajectory over " +
-    "the same prefix, across batches, with silent days zero-filled live") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    val ns = Seq(4L, 4L, 0L, 9L, 9L, 9L) // silent day 2 inside the span
-    val ev = ns.zipWithIndex.flatMap { case (n, d) =>
-      (1 to n.toInt).map(i => ("m", d * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.pageHinkleyDaily(ev, "k", col("tus"))
-      .orderBy("day")
-      .select("day", "n", "ph_up_milli", "ph_down_milli",
-        "alarm_up", "alarm_down")
-      .as[(Long, Long, Long, Long, Boolean, Boolean)].collect().toSeq
-    // offline calibration: target = lambda/4 (the batch chart's own),
-    // delta = target/20 — exactly the batch constants
-    val lambda = Monitor.pageHinkleyDaily(ev, "k", col("tus"))
-      .select("lambda_milli").as[Long].head()
-    val mem = MemoryStream[EventStreamOps.CcEv]
-    val q = EventStreamOps.streamingPageHinkley(mem.toDS(),
-        deltaMilli = lambda / 4 / 20, lambdaMilli = lambda)
-      .writeStream.format("memory").queryName("phlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.CcEv
-      mem.addData(CcEv("m", 0L, 4L), CcEv("m", 1L, 4L))
-      q.processAllAvailable()
-      mem.addData(CcEv("m", 3L, 9L), CcEv("m", 4L, 9L))
-      mem.addData(CcEv("m", 5L, 9L), CcEv("m", 4L, 9L)) // dup day ignored
-      q.processAllAvailable()
-      val live = spark.table("phlive")
-        .as[EventStreamOps.PhOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.phUpMilli, o.phDownMilli,
-          o.alarmUp, o.alarmDown))
-      assert(live === ref)
-    } finally q.stop()
-  }
-
-  test("streamingCusum == batch cusumDaily trajectory over the same " +
-    "prefix, across batches, with silent days zero-filled live") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    // batch reference on the full series: key m, days 0..5
-    val ns = Seq(4L, 4L, 0L, 9L, 9L, 9L) // silent day 2 inside the span
-    val ev = ns.zipWithIndex.flatMap { case (n, d) =>
-      (1 to n.toInt).map(i => ("m", d * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.cusumDaily(ev, "k", col("tus"))
-      .orderBy("day")
-      .select("day", "n", "pos_milli", "neg_milli", "alarm_up", "alarm_down")
-      .as[(Long, Long, Long, Long, Boolean, Boolean)].collect().toSeq
-    // offline calibration: the batch chart's own target/slack/h
-    val cal = Monitor.cusumDaily(ev, "k", col("tus"))
-      .select("target_milli").as[Long].head()
-    val mem = MemoryStream[EventStreamOps.CcEv]
-    val q = EventStreamOps.streamingCusum(mem.toDS(),
-        targetMilli = cal, slackMilli = cal / 2, hMilli = cal * 4)
-      .writeStream.format("memory").queryName("cusumlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.CcEv
-      // the daily rollup feed, split mid-series; the silent day 2 is
-      // NOT in the feed — the op must synthesize it
-      mem.addData(CcEv("m", 0L, 4L), CcEv("m", 1L, 4L))
-      q.processAllAvailable()
-      mem.addData(CcEv("m", 3L, 9L), CcEv("m", 4L, 9L))
-      mem.addData(CcEv("m", 5L, 9L), CcEv("m", 4L, 9L)) // dup day ignored
-      q.processAllAvailable()
-      val live = spark.table("cusumlive")
-        .as[EventStreamOps.CcOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.posMilli, o.negMilli, o.alarmUp, o.alarmDown))
-      assert(live === ref)
-    } finally q.stop()
-  }
-
-  test("streamingGapFill == batch gapFillDaily grid over the same " +
-    "prefix: silent days synthesized live with the carried reading, " +
-    "null-reading days carry through") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    // raw events: day 0 two readings (last 2.25), days 1 and 3 silent,
-    // day 2 one NULL reading, day 4 reading 7.0
-    val ev = Seq(
-      ("g", 5L, 1L, Option(1.5)), ("g", 9L, 2L, Option(2.25)),
-      ("g", 2 * day + 1, 3L, None: Option[Double]),
-      ("g", 4 * day + 2, 4L, Option(7.0))
-    ).toDF("k", "tus", "id", "v")
-    val ref = graft.ops.TemporalJoins
-      .gapFillDaily(ev, "k", col("tus"), "id", "v")
-      .select("key", "day", "n", "filled_q", "is_gap")
-      .as[(String, Long, Long, Option[Long], Boolean)]
-      .collect().sortBy(_._2).toSeq
-    val mem = MemoryStream[EventStreamOps.GfEv]
-    val q = EventStreamOps.streamingGapFill(mem.toDS())
-      .writeStream.format("memory").queryName("gapfilllive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.GfEv
-      // the rollup feed the batch day-agg would emit, split mid-series
-      mem.addData(GfEv("g", 0L, 2L, Some(2250L)))
-      q.processAllAvailable()
-      mem.addData(GfEv("g", 2L, 1L, None), GfEv("g", 4L, 1L, Some(7000L)),
-        GfEv("g", 2L, 1L, None)) // dup ignored
-      q.processAllAvailable()
-      val live = spark.table("gapfilllive")
-        .as[EventStreamOps.GfOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.key, o.day, o.n, o.filledQ, o.isGap))
-      assert(live === ref)
-    } finally q.stop()
-  }
-
-  test("streamingEwma == batch ewmaDaily trajectory across batches " +
-    "with a synthesized silent day") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    val ns = Seq(3L, 3L, 0L, 12L, 5L)
-    val ev = ns.zipWithIndex.flatMap { case (n, d) =>
-      (1 to n.toInt).map(i => ("w", d * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.ewmaDaily(ev, "k", col("tus"))
-      .orderBy("day")
-      .select("day", "n", "ewma_milli", "dev_ppm", "flagged")
-      .as[(Long, Long, Long, Long, Boolean)].collect().toSeq
-    val mem = MemoryStream[EventStreamOps.CcEv]
-    val q = EventStreamOps.streamingEwma(mem.toDS())
-      .writeStream.format("memory").queryName("ewmalive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.CcEv
-      mem.addData(CcEv("w", 0L, 3L), CcEv("w", 1L, 3L))
-      q.processAllAvailable()
-      mem.addData(CcEv("w", 3L, 12L), CcEv("w", 4L, 5L))
-      q.processAllAvailable()
-      val live = spark.table("ewmalive")
-        .as[EventStreamOps.EwOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.ewmaMilli, o.devPpm, o.flagged))
-      assert(live === ref)
-    } finally q.stop()
-  }
-
-  test("streamingHolt == batch holtDaily trajectory across batches " +
-    "with a synthesized silent day") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    val ns = Seq(10L, 10L, 0L, 22L, 7L)
-    val ev = ns.zipWithIndex.flatMap { case (n, d) =>
-      (1 to n.toInt).map(i => ("h", d * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.holtDaily(ev, "k", col("tus"))
-      .orderBy("day")
-      .select("day", "n", "level_milli", "trend_milli", "forecast_milli")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val mem = MemoryStream[EventStreamOps.CcEv]
-    val q = EventStreamOps.streamingHolt(mem.toDS())
-      .writeStream.format("memory").queryName("holtlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.CcEv
-      mem.addData(CcEv("h", 0L, 10L), CcEv("h", 1L, 10L))
-      q.processAllAvailable()
-      mem.addData(CcEv("h", 3L, 22L), CcEv("h", 4L, 7L))
-      q.processAllAvailable()
-      val live = spark.table("holtlive")
-        .as[EventStreamOps.HoltOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.levelMilli, o.trendMilli, o.forecastMilli))
-      assert(live === ref)
-    } finally q.stop()
-  }
-
-  test("streamingBacklog == batch backlogDaily trajectory across " +
-    "batches (quiet days drain the queue live)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    implicit val sc = spark.sqlContext
-    val ns = Seq(9L, 9L, 0L, 0L, 6L)
-    val ev = ns.zipWithIndex.flatMap { case (n, d) =>
-      (1 to n.toInt).map(i => ("b", d * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.backlogDaily(ev, "k", col("tus"))
-      .orderBy("day").select("day", "n", "backlog_milli", "drained")
-      .as[(Long, Long, Long, Boolean)].collect().toSeq
-    val cap = Monitor.backlogDaily(ev, "k", col("tus"))
-      .select("cap_milli").as[Long].head()
-    val mem = MemoryStream[EventStreamOps.CcEv]
-    val q = EventStreamOps.streamingBacklog(mem.toDS(), capMilli = cap)
-      .writeStream.format("memory").queryName("backlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      import EventStreamOps.CcEv
-      mem.addData(CcEv("b", 0L, 9L))
-      q.processAllAvailable()
-      mem.addData(CcEv("b", 1L, 9L), CcEv("b", 4L, 6L))
-      q.processAllAvailable()
-      val live = spark.table("backlive")
-        .as[EventStreamOps.BkOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.backlogMilli, o.drained))
-      assert(live === ref)
-    } finally q.stop()
   }
 
   test("q_waterfill invariants: allocations sum to the budget exactly, " +
@@ -585,53 +295,6 @@ class MonitorSpec extends SparkSpec {
     assert(!none)
   }
 
-  test("streamingSprt: a 3%-rate stream accepts H1, a 2%-rate stream " +
-    "accepts H0, decisions FREEZE once crossed, and the trajectory " +
-    "matches a hand fold across batch boundaries") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.SprtEv
-    implicit val sc = spark.sqlContext
-    // deterministic streams: "h1" hits every 33rd obs (~3%), "h0"
-    // every 50th (2%) — exactly the two hypotheses
-    def mk(k: String, every: Int, n: Int, from: Int = 0) =
-      (from until from + n).map(i => SprtEv(k, i.toLong, (i + 1) % every == 0))
-    val mem = MemoryStream[SprtEv]
-    val q = EventStreamOps.streamingSprt(mem.toDS())
-      .writeStream.format("memory").queryName("sprtlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest(k: String) = spark.table("sprtlive")
-        .as[EventStreamOps.SprtOut].collect().filter(_.key == k).last
-      mem.addData(mk("h1", 33, 400) ++ mk("h0", 50, 400): _*)
-      q.processAllAvailable()
-      mem.addData(mk("h1", 33, 1200, 400) ++ mk("h0", 50, 1200, 400): _*)
-      q.processAllAvailable()
-      val d1 = latest("h1"); val d0 = latest("h0")
-      assert(d1.decision === "accept_h1", d1)
-      assert(d0.decision === "accept_h0", d0)
-      // freeze: decisions and llr must not move after the boundary
-      val n1Frozen = d1.nObs; val llr1Frozen = d1.llrMicro
-      mem.addData(mk("h1", 2, 500, 1600): _*) // wildly different tail
-      q.processAllAvailable()
-      val d1b = latest("h1")
-      assert(d1b.decision === "accept_h1" && d1b.nObs === n1Frozen &&
-        d1b.llrMicro === llr1Frozen, d1b)
-      // hand fold replicates the stopping point exactly
-      var llr = 0L; var n = 0L; var dec = "continue"
-      mk("h1", 33, 1600).foreach { e =>
-        if (dec == "continue") {
-          llr += (if (e.hit) 405465L else -10257L)
-          n += 1
-          if (llr >= 2944439L) dec = "accept_h1"
-          else if (llr <= -2944439L) dec = "accept_h0"
-        }
-      }
-      assert((dec, n, llr) === (d1.decision, d1.nObs, d1.llrMicro))
-    } finally q.stop()
-  }
-
   test("q_pareto is exactly the non-dominated set (brute-force check " +
     "per source at sf0.001)") {
     val d = "/root/testdata/sf0.001"
@@ -728,86 +391,5 @@ class MonitorSpec extends SparkSpec {
     }
     assert(got === exp)
     assert(got.last._3 < 0L, "a sustained decline must read a negative trend")
-  }
-
-  test("streamingPsi: a day matching the calibrated reference reads 0, " +
-    "a migrated day reads the batch fixture's 20793, a silent day " +
-    "reads maximal drift — days close only when a later day arrives, " +
-    "even split across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{PbEv, PsOut}
-    implicit val sc = spark.sqlContext
-    // reference = 4 docs all in bucket 0, smoothed exactly as the
-    // batch formula: b0 -> 1e6, others greatest(0,1)*1e6 div 4
-    val ref = 1000000L +: Seq.fill(9)(250000L)
-    val mem = MemoryStream[PbEv]
-    val q = EventStreamOps.streamingPsi(mem.toDS(), ref)
-      .writeStream.format("memory").queryName("psilive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def rows = spark.table("psilive").as[PsOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-      // day 0 mirrors the reference; its bucket rows arrive across
-      // TWO batches and must not close until day 1 shows up
-      mem.addData(PbEv("m", 0L, 0L, 3L))
-      q.processAllAvailable()
-      assert(rows.isEmpty, "an open day must not emit")
-      mem.addData(PbEv("m", 0L, 0L, 1L), PbEv("m", 1L, 9L, 4L))
-      q.processAllAvailable()
-      assert(rows.map(o => (o.day, o.nDay, o.psiE4, o.verdict)) ===
-        Seq((0L, 4L, 0L, "stable")))
-      // day 2 closes day 1 (the total b0 -> b9 migration = the batch
-      // ExperimentSpec fixture's 20793); day 4 closes day 2 and
-      // synthesizes silent day 3 = all-zero histogram, q = 1e6 apiece
-      mem.addData(PbEv("m", 2L, 0L, 4L), PbEv("m", 4L, 0L, 1L))
-      q.processAllAvailable()
-      val got = rows.map(o => (o.day, o.nDay, o.psiE4, o.verdict))
-      // silent day: 9 buckets at (250000-1e6)*floor(ln(.25)*1e4)
-      //   = 9 * 750000 * 13863 div 1e6 = 93575
-      assert(got === Seq((0L, 4L, 0L, "stable"),
-        (1L, 4L, 20793L, "shifted"), (2L, 4L, 0L, "stable"),
-        (3L, 0L, 93575L, "shifted")))
-    } finally q.stop()
-  }
-
-  test("streamingHoltWinters == batch holtWintersDaily trajectory over " +
-    "the same prefix, across batches, warm-up silent, in-span silent " +
-    "day zero-filled live") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.EventStreamOps
-    import graft.streaming.EventStreamOps.{CcEv, HwOut}
-    implicit val sc = spark.sqlContext
-    // 12 days, weekly-ish pattern with a silent day 9 inside the span
-    val ns = Seq(5L, 2L, 3L, 2L, 2L, 2L, 8L, 5L, 2L, 0L, 2L, 2L)
-    val ev = ns.zipWithIndex.flatMap { case (n, dd) =>
-      (1 to n.toInt).map(i => ("w", dd * day + i.toLong))
-    }.toDF("k", "tus")
-    val ref = Monitor.holtWintersDaily(ev, "k", col("tus"))
-      .orderBy("day")
-      .select("day", "n", "forecast_milli", "level_milli", "trend_milli",
-        "seas_milli")
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val mem = MemoryStream[CcEv]
-    val q = EventStreamOps.streamingHoltWinters(mem.toDS())
-      .writeStream.format("memory").queryName("hwlive")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      // batch 1 ends mid-warm-up; batch 2 crosses the init boundary;
-      // batch 3 jumps over the silent day 9
-      mem.addData((0 to 4).map(dd => CcEv("w", dd.toLong, ns(dd))): _*)
-      q.processAllAvailable()
-      assert(spark.table("hwlive").isEmpty, "warm-up must emit nothing")
-      mem.addData((5 to 8).map(dd => CcEv("w", dd.toLong, ns(dd))): _*)
-      mem.addData(CcEv("w", 10L, ns(10)), CcEv("w", 11L, ns(11)))
-      q.processAllAvailable()
-      val live = spark.table("hwlive").as[HwOut].collect().toSeq
-        .groupBy(_.day).map { case (_, v) => v.last }.toSeq.sortBy(_.day)
-        .map(o => (o.day, o.n, o.forecastMilli, o.levelMilli,
-          o.trendMilli, o.seasMilli))
-      assert(live === ref)
-    } finally q.stop()
   }
 }

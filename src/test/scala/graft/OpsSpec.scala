@@ -1101,42 +1101,6 @@ class OpsSpec extends SparkSpec {
       .filter(col("w_q") =!= 0L).isEmpty)
   }
 
-  test("importanceRatioTable + importanceScoreColumns: the serving-table " +
-    "path scores bit-identically to the batch scorer, covers buckets " +
-    "the raw corpus never hashed, and scores without a join or shuffle") {
-    val raw = Seq(
-      (1L, "the cat sat", "en"),
-      (2L, "le chat noir", "fr"),
-      (3L, "the dog sat", "en")).toDF("doc_id", "text", "lang")
-    val target = raw.filter(col("lang") === "en")
-    val table = TextStats.importanceRatioTable(raw, target)
-    assert(table.length === 1024)
-    def score(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("doc_id") +: TextStats.importanceScoreColumns(table): _*)
-    val batch = TextStats.importanceWeights(raw, target)
-      .select("doc_id", "n_grams", "sum_lrq", "logw").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toMap
-    val served = score(raw).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toMap
-    assert(batch.keySet.forall(k => served(k) === batch(k)))
-    // docs the batch never saw still score: absent buckets fall back
-    // to the smoothing floor; gram-less docs score (0,0,0.0); null
-    // text scores nulls (contract differences from the batch scorer)
-    val novel = Seq((9L, "totally unseen words here"), (10L, ""),
-      (11L, null: String)).toDF("doc_id", "text")
-    val sN = score(novel).collect().map(r => r.getLong(0) -> r).toMap
-    assert(sN(9L).getLong(1) === 7L) // 4 unigrams + 3 bigrams
-    assert(!sN(9L).isNullAt(2))
-    assert(sN(10L).getLong(1) === 0L && sN(10L).getLong(2) === 0L &&
-      sN(10L).getDouble(3) === 0.0)
-    assert(sN(11L).isNullAt(1) && sN(11L).isNullAt(2) && sN(11L).isNullAt(3))
-    // model-in-plan: scoring is a pure projection, no exchange/join
-    val plan = score(raw).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Join"))
-  }
-
   test("decodeMp4 parses a spec-conformant ISO-BMFF box tree: movie " +
     "timescale/duration from mvhd (v0 and v1), dims from the first " +
     "video tkhd (audio tracks carry zeros), track count; foreign and " +
@@ -2780,5 +2744,23 @@ class OpsSpec extends SparkSpec {
         .as[(String, String)].collect().toSeq
     assert(advise(balanced) === Seq(("trained", "serve")))
     assert(advise(skewed) === Seq(("trained", "rebuild")))
+  }
+
+  test("embedContamination: the fixture flags at 0.8, and a zero-norm " +
+    "vector drops out of the match set even at a threshold every " +
+    "finite cosine clears") {
+    val all = (1 to 240).map { i =>
+      (i.toLong, Array.tabulate(8)(d => ((i * 13 + d * 7) % 19 - 9).toDouble))
+    }
+    val bench = all.filter(_._1 % 100 == 0).toDF("vec_id", "embedding")
+    val corpus = all.filterNot(_._1 % 100 == 0).toDF("vec_id", "embedding")
+    assert(!Similarity.embedContamination(corpus, bench,
+      thresholdQ = 8000L, dim = 8).isEmpty)
+    val probe = Seq((7000L, Array.fill(8)(0.0)),
+      (7001L, Array.tabulate(8)(_.toDouble + 1))).toDF("vec_id", "embedding")
+    val flagged = Similarity.embedContamination(probe, bench,
+        thresholdQ = -20000L, dim = 8)
+      .as[(Long, Long, Long, Long)].collect().map(_._1).toSet
+    assert(flagged === Set(7001L))
   }
 }

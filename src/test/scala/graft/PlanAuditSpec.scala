@@ -566,17 +566,6 @@ class PlanAuditSpec extends SparkSpec {
     assert("HashAggregate".r.findAllIn(p).length >= 4, p)
   }
 
-  test("importanceScoreColumns (DSIR serving): the frozen table is a " +
-    "plan literal — scoring is a pure projection, zero Exchanges, " +
-    "zero joins") {
-    val table = TextStats.importanceRatioTable(
-      docs, docs.filter(col("doc_id") % 2 === 0))
-    val p = plan(docs.select(
-      col("doc_id") +: TextStats.importanceScoreColumns(table): _*))
-    assert(!p.contains("Exchange"), p)
-    assert(!p.contains("Join"), p)
-  }
-
   test("binnedIntervalJoin meets by bin EQUI-join — no cartesian " +
     "product, no nested-loop join at any input size") {
     val l = (1 to 100).map(i => (i.toLong, i.toLong * 10, i.toLong * 10 + 15))

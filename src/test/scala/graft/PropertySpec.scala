@@ -416,32 +416,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: DSIR serving-table scores == batch scorer on RANDOM " +
-    "corpora and random target subsets (4 seeds)") {
-    import graft.ops.TextStats
-    for (seed <- 1L to 4L) {
-      val rnd = new scala.util.Random(seed)
-      val vocab = (1 to 25).map(i => s"w$i")
-      val docs = (1 to 40).map { i =>
-        (i.toLong, (1 to 1 + rnd.nextInt(12))
-          .map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" "))
-      }.toDF("doc_id", "text")
-      val target = docs.filter(col("doc_id") % (2 + seed) === 0)
-      val batch = TextStats.importanceWeights(docs, target, buckets = 64)
-        .select("doc_id", "n_grams", "sum_lrq").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val table = TextStats.importanceRatioTable(docs, target, buckets = 64)
-      val served = docs.select(
-          col("doc_id") +: TextStats.importanceScoreColumns(table): _*)
-        .select("doc_id", "n_grams", "sum_lrq").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(batch.keySet.nonEmpty, s"seed=$seed")
-      batch.foreach { case (id, bv) =>
-        assert(served(id) === bv, s"seed=$seed doc=$id")
-      }
-    }
-  }
-
   test("property: time-split as-of == composed as-of over random " +
     "skewed data and random bucket widths (8 seeds x strict modes)") {
     for (seed <- 1L to 8L) {

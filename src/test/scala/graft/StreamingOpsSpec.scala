@@ -1,416 +1,14 @@
 package graft
 
-import graft.streaming.EventStreamOps
-import graft.streaming.EventStreamOps.{Ev, SessionOut}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-/** Streaming event operators driven through MemoryStream. */
+/** Batch operators and served queries run on a stream, driven through
+  * MemoryStream or a file source.
+  */
 class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("windowedCounts: tumbling windows + watermark aggregate correctly " +
-    "under AvailableNow-style processing") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val df = mem.toDF().toDF("ts", "event_type")
-    val q = EventStreamOps.windowedCounts(df, window_ = "10 minutes")
-      .writeStream.format("memory").queryName("wc")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData((t(1), "click"), (t(2), "click"), (t(3), "view"), (t(12), "click"))
-      q.processAllAvailable()
-      val rows = spark.table("wc")
-        .select(col("window.start").cast("string"), col("event_type"), col("n"))
-        .as[(String, String, Long)].collect().sorted
-      assert(rows.toSeq === Seq(
-        ("2020-01-01 10:00:00", "click", 2L),
-        ("2020-01-01 10:00:00", "view", 1L),
-        ("2020-01-01 10:10:00", "click", 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingSeqAudit: running count/max per table; duplicates and " +
-    "cross-batch regressions flag as non-monotonic, in-batch order is " +
-    "forgiven") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[EventStreamOps.SeqEv]
-    val q = EventStreamOps.streamingSeqAudit(mem.toDS())
-      .writeStream.format("memory").queryName("seqaudit")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest() = spark.table("seqaudit")
-        .as[EventStreamOps.SeqAudit].collect()
-        .groupBy(_.tbl).map { case (_, v) => v.last }.toSeq.sortBy(_.tbl)
-      import EventStreamOps.SeqEv
-      // batch 1: t1 clean (out of order WITHIN the batch is sorted);
-      // t2 contains an in-batch duplicate
-      mem.addData(SeqEv("t1", 2L), SeqEv("t1", 1L), SeqEv("t1", 3L),
-        SeqEv("t2", 5L), SeqEv("t2", 5L))
-      q.processAllAvailable()
-      assert(latest() === Seq(
-        EventStreamOps.SeqAudit("t1", 3L, 3L, 0L),
-        EventStreamOps.SeqAudit("t2", 2L, 5L, 1L)))
-      // batch 2: t1 regresses below its max -> non-monotonic
-      mem.addData(SeqEv("t1", 2L), SeqEv("t1", 4L))
-      q.processAllAvailable()
-      assert(latest() === Seq(
-        EventStreamOps.SeqAudit("t1", 5L, 4L, 1L),
-        EventStreamOps.SeqAudit("t2", 2L, 5L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingViewDelta: running per-key net delta == batch " +
-    "Ivm.viewDelta over the prefix after every batch; net-zero keys " +
-    "stay visible (back-to-base signal)") {
-    implicit val sc = spark.sqlContext
-    // pre-image-carrying change events: (grp, amt, old_grp, old_amt, ev)
-    val mem = MemoryStream[(Long, String, java.lang.Long, String, String)]
-    val df = mem.toDF().toDF("grp", "amt", "old_grp", "old_amt", "audit_event")
-      .select(col("grp"), col("amt").cast("decimal(12,2)").as("amt"),
-        col("old_grp"), col("old_amt").cast("decimal(12,2)").as("old_amt"),
-        col("audit_event"))
-    val q = EventStreamOps.streamingViewDelta(df, "grp", "amt")
-      .writeStream.format("memory").queryName("ivm")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def state() = spark.table("ivm")
-        .select(col("grp"), col("d_sum").cast("string"), col("d_n"))
-        .as[(Long, String, Long)].collect()
-        .groupBy(_._1).map { case (_, v) => v.last }.toSeq.sortBy(_._1)
-      // batch 1: insert 5.00 into grp 1, move 3.00 from grp 2 to grp 3
-      mem.addData(
-        (1L, "5.00", null, null, "insert"),
-        (3L, "3.00", java.lang.Long.valueOf(2L), "3.00", "update"))
-      q.processAllAvailable()
-      assert(state() === Seq((1L, "5.00", 1L), (2L, "-3.00", -1L),
-        (3L, "3.00", 1L)))
-      // batch 2: delete the grp-1 row -> its delta returns to zero and
-      // MUST still be emitted (update mode re-emits the changed key)
-      mem.addData((1L, "5.00", java.lang.Long.valueOf(1L), "5.00", "delete"))
-      q.processAllAvailable()
-      assert(state() === Seq((1L, "0.00", 0L), (2L, "-3.00", -1L),
-        (3L, "3.00", 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingTrendingTerms: sliding windows count exploded tokens " +
-    "per (window, token)") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String)]
-    val df = mem.toDF().toDF("ts", "text")
-    val q = EventStreamOps.streamingTrendingTerms(df,
-        window_ = "10 minutes", slide = "5 minutes")
-      .writeStream.format("memory").queryName("trend")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData((t(1), "spam spam ham"), (t(6), "spam eggs"))
-      q.processAllAvailable()
-      val rows = spark.table("trend")
-        .select(col("window.start").cast("string"), col("token"), col("n"))
-        .as[(String, String, Long)].collect().sorted
-      // 10:01 doc lands in windows [09:55,10:05) and [10:00,10:10);
-      // 10:06 doc in [10:00,10:10) and [10:05,10:15)
-      assert(rows.toSeq === Seq(
-        ("2020-01-01 09:55:00", "ham", 1L),
-        ("2020-01-01 09:55:00", "spam", 2L),
-        ("2020-01-01 10:00:00", "eggs", 1L),
-        ("2020-01-01 10:00:00", "ham", 1L),
-        ("2020-01-01 10:00:00", "spam", 3L),
-        ("2020-01-01 10:05:00", "eggs", 1L),
-        ("2020-01-01 10:05:00", "spam", 1L)))
-    } finally q.stop()
-  }
-
-  test("streamingDedup drops re-deliveries within the watermark and " +
-    "emits each key once") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStreamOps.streamingDedup(df, Seq("doc_id"))
-      .writeStream.format("memory").queryName("sdedup")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData((t(1), 1L, "a"), (t(1), 1L, "a dup"), (t(2), 2L, "b"))
-      q.processAllAvailable()
-      // re-delivery of doc 1 in a LATER batch, still inside the window
-      mem.addData((t(3), 1L, "a again"), (t(4), 3L, "c"))
-      q.processAllAvailable()
-      val ids = spark.table("sdedup").select("doc_id")
-        .as[Long].collect().sorted
-      assert(ids.toSeq === Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("streamingNearDedup keeps the first doc per simhash: token-set " +
-    "duplicates drop across batches, distinct docs pass") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStreamOps.streamingNearDedup(df)
-      .writeStream.format("memory").queryName("sneardedup")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData((t(1), 1L, "the cat sat here"), (t(2), 2L, "dogs bark loud"))
-      q.processAllAvailable()
-      // same token SET as doc 1 (reordered + repeated) -> same simhash
-      mem.addData((t(3), 3L, "here the cat sat sat"), (t(4), 4L, "novel words only"))
-      q.processAllAvailable()
-      val ids = spark.table("sneardedup").select("doc_id").as[Long].collect().sorted
-      assert(ids.toSeq === Seq(1L, 2L, 4L))
-    } finally q.stop()
-  }
-
-  test("streamingDedupAgainstBase: base-corpus duplicates drop at the " +
-    "gate, in-stream repeats drop within the watermark, novel docs pass") {
-    implicit val sc = spark.sqlContext
-    val base = Seq((100L, "already ingested text"), (101L, "old doc"))
-      .toDF("doc_id", "text")
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStreamOps.streamingDedupAgainstBase(df, base)
-      .writeStream.format("memory").queryName("sdedupbase")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData(
-        (t(1), 1L, "already ingested text"),  // dup of base -> dropped
-        (t(2), 2L, "fresh document one"))
-      q.processAllAvailable()
-      mem.addData(
-        (t(3), 3L, "fresh document one"),     // in-stream repeat -> dropped
-        (t(4), 4L, "fresh document two"))
-      q.processAllAvailable()
-      val ids = spark.table("sdedupbase").select("doc_id").as[Long].collect().sorted
-      assert(ids.toSeq === Seq(2L, 4L))
-    } finally q.stop()
-  }
-
-  test("tombstoneGate: tombstoned ids flag (not vanish) across " +
-    "micro-batches; the foreachBatch form re-reads the list so a GROWN " +
-    "tombstone set is honored without restart") {
-    implicit val sc = spark.sqlContext
-    val tombDir = tmpDir("graft-tomb")
-    Seq(7L).toDF("doc_id").write.mode("overwrite").parquet(tombDir)
-    val mem = MemoryStream[(Long, String)]
-    val df = mem.toDF().toDF("doc_id", "text")
-    val results = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val tomb = batch.sparkSession.read.parquet(tombDir) // fresh listing
-        val out = EventStreamOps.tombstoneGate(batch.toDF(), tomb)
-        results.synchronized {
-          results ++= out.select("doc_id", "tombstoned")
-            .collect().map(r => (r.getLong(0), r.getBoolean(1)))
-        }
-        ()
-      }
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData((7L, "deleted doc re-fetched"), (8L, "fresh doc"))
-      q.processAllAvailable()
-      // the deletion list grows mid-stream; the next batch re-reads it
-      Seq(7L, 8L).toDF("doc_id").write.mode("overwrite").parquet(tombDir)
-      mem.addData((8L, "doc 8 again, now tombstoned"), (9L, "fresh"))
-      q.processAllAvailable()
-      assert(results.sorted.toSeq ===
-        Seq((7L, true), (8L, false), (8L, true), (9L, false)))
-    } finally q.stop()
-  }
-
-  test("streamingCorpusDiff: adds/changes classify live across " +
-    "micro-batches (re-deliveries dropped in-watermark, unchanged " +
-    "silent); with the scan-end removed half the composition equals " +
-    "the batch corpusDiff exactly") {
-    implicit val sc = spark.sqlContext
-    val base = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"))
-      .toDF("doc_id", "text")
-    val currentRows = Seq((1L, "alpha"), (2L, "beta prime"),
-      (3L, "gamma"), (5L, "epsilon"))
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "text")
-    val q = EventStreamOps.streamingCorpusDiff(df, base)
-      .writeStream.format("memory").queryName("scdiff")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData((t(1), 1L, "alpha"),        // unchanged -> silent
-        (t(2), 2L, "beta prime"))             // changed
-      q.processAllAvailable()
-      mem.addData((t(3), 2L, "beta prime"),   // crawler re-delivery -> dropped
-        (t(4), 3L, "gamma"),                  // unchanged -> silent
-        (t(5), 5L, "epsilon"))                // added
-      q.processAllAvailable()
-      // a CONTENT CHANGE inside the watermark window of an earlier
-      // delivery of the same id: the dedup keys on (id, hash), so the
-      // new hash classifies instead of silently dropping
-      mem.addData((t(6), 1L, "alpha prime"))
-      q.processAllAvailable()
-      assert(spark.table("scdiff")
-        .filter(col("doc_id") === 1L && col("status") === "changed")
-        .count() === 1L)
-      // the final snapshot for the batch comparison reflects the change
-      val currentRows2 = currentRows.map {
-        case (1L, _) => (1L, "alpha prime"); case r => r }
-      // scan complete: removed = base ids the crawl never visited,
-      // derived from the visited-id ledger (all streamed ids)
-      val removed = EventStreamOps.corpusDiffRemoved(
-        base, currentRows2.toDF("doc_id", "text"))
-      val got = spark.table("scdiff").unionByName(removed)
-        .as[(Long, String, Option[String], Option[String])]
-        .collect().sortBy(_._1).toSeq
-      val want = graft.ops.Dedup.corpusDiff(
-          base, currentRows2.toDF("doc_id", "text"))
-        .as[(Long, String, Option[String], Option[String])]
-        .collect().sortBy(_._1).toSeq
-      assert(got === want)
-      assert(got.map(r => (r._1, r._2)) ===
-        Seq((1L, "changed"), (2L, "changed"), (4L, "removed"),
-          (5L, "added")))
-    } finally q.stop()
-  }
-
-  test("streamingAttribution: purchases join sources of the same user " +
-    "within the look-back interval; outside-window and cross-user " +
-    "sources never match; unmatched purchases surface with null source " +
-    "after the watermark closes them") {
-    implicit val sc = spark.sqlContext
-    val pMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val sMem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-    val purchases = pMem.toDF().toDF("user_id", "event_id", "ts")
-    val sources = sMem.toDF().toDF("user_id", "event_id", "src_ts")
-    val q = EventStreamOps.streamingAttribution(purchases, sources,
-        lookback = "10 minutes", lateness = "1 minute")
-      .writeStream.format("memory").queryName("sattr")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // user 1: click at 10:02 then purchase at 10:05 (in window);
-      // user 2: click at 10:01, purchase at 10:20 (outside look-back);
-      // user 3: purchase with no source at all
-      sMem.addData((1L, 100L, t(2)), (2L, 200L, t(1)))
-      pMem.addData((1L, 10L, t(5)), (2L, 20L, t(20)), (3L, 30L, t(6)))
-      q.processAllAvailable()
-      // push both watermarks far past every interval so the left-outer
-      // emits the unmatched purchases with null sources
-      sMem.addData((9L, 999L, t(59)))
-      pMem.addData((9L, 99L, t(59)))
-      q.processAllAvailable()
-      val rows = spark.table("sattr")
-        .filter(col("user_id") < 9)
-        .select(col("user_id"), col("event_id"), col("src_id"))
-        .as[(Long, Long, Option[Long])].collect().sortBy(_._1)
-      assert(rows.toSeq === Seq(
-        (1L, 10L, Some(100L)),  // in-window match
-        (2L, 20L, None),        // source exists but outside look-back
-        (3L, 30L, None)))       // no source at all
-    } finally q.stop()
-  }
-
-  test("sessionizeStream: closes a session when the id gap exceeds " +
-    "maxGap, keeps the live one in state") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = EventStreamOps.sessionizeStream(mem.toDS(), maxGap = 10L)
-      .writeStream.format("memory").queryName("sess")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // user 1: events 1,5,8 (one session) then 100 -> closes first session
-      // user 2: single event, stays open in state
-      mem.addData(Ev(1, 1), Ev(1, 5), Ev(1, 8), Ev(2, 50))
-      q.processAllAvailable()
-      mem.addData(Ev(1, 100))
-      q.processAllAvailable()
-      val closed = spark.table("sess").as[SessionOut].collect()
-      assert(closed.toSeq === Seq(SessionOut(1L, 3L, 8L)))
-    } finally q.stop()
-  }
-
-  test("streamingIvfAssign == batch assignToCentroids with frozen " +
-    "centroids, end-to-end through MemoryStream") {
-    import graft.ops.Similarity
-    import graft.streaming.VectorStreamOps
-    val rnd = new scala.util.Random(11)
-    def v() = Seq.fill(64)(rnd.nextDouble() * 2 - 1)
-    val centroids = Seq(10L -> v(), 20L -> v(), 30L -> v())
-    val vecs = (1L to 12L).map(i =>
-      (i, java.sql.Timestamp.valueOf("2020-01-01 10:00:01"),
-        v().map(_.toFloat)))
-    val batchDf = vecs.toDF("vec_id", "ts", "embedding")
-    val centDf = centroids
-      .map { case (id, cv) => (id, cv) }.toDF("centroid_id", "centv")
-    val expected = Similarity
-      .assignToCentroids(batchDf, centroids = Some(centDf))
-      .select("vec_id", "centroid_id")
-      .as[(Long, Long)].collect().sortBy(_._1).toSeq
-
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
-    val assigned = VectorStreamOps.streamingIvfAssign(
-      mem.toDF().toDF("vec_id", "ts", "embedding"), centroids)
-    val q = assigned.writeStream.format("memory").queryName("siva")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(vecs: _*)
-      q.processAllAvailable()
-      val got = spark.table("siva").select("vec_id", "centroid_id")
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got === expected)
-      assert(got.map(_._2).toSet.size > 1, "degenerate: all one list")
-    } finally q.stop()
-  }
-
-  test("streaming ingest into the PERSISTED trained index: arrivals " +
-    "assign against the ArtifactStore-loaded Lloyd centroids bit-equal " +
-    "to the batch incremental path (the q_trained_incr contract, live)") {
-    import graft.ops.{ArtifactStore, Similarity}
-    import graft.streaming.VectorStreamOps
-    val sf = "/root/testdata/sf0.001"
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    // train -> save -> load: the centroids any fresh serving replica
-    // (batch or streaming) starts from
-    val dir = tmpDir("graft-trained-stream")
-    val km = Map("k" -> "16", "iters" -> "2")
-    val fp = ArtifactStore.fingerprint(e, Seq("vec_id", "embedding"))
-    ArtifactStore.save(Similarity.kmeansExact(e, k = 16, iters = 2),
-      dir, "kmeans_cent", km, fp)
-    val loaded = ArtifactStore.load(spark, dir, "kmeans_cent", km, fp)
-    val frozen = loaded.select("centroid_id", "centv")
-      .as[(Long, Seq[Double])].collect().toSeq
-    // the arriving batch: the %7 stride stand-in q_trained_incr uses
-    val arriving = e.filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id"), col("embedding").cast("array<float>"))
-      .as[(Long, Seq[Float])].collect().toSeq
-    val expected = Similarity.assignToCentroids(
-        e.filter(col("vec_id") % 7 === 0),
-        centroids = Some(loaded.select("centroid_id", "centv")))
-      .select("vec_id", "centroid_id")
-      .as[(Long, Long)].collect().sortBy(_._1).toSeq
-
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Float])]
-    val assigned = VectorStreamOps.streamingIvfAssign(
-      mem.toDF().toDF("vec_id", "embedding"), frozen)
-    val q = assigned.writeStream.format("memory").queryName("trainedstream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      // two micro-batches: parity must not depend on arrival batching
-      val (b1, b2) = arriving.splitAt(arriving.size / 2)
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val got = spark.table("trainedstream").select("vec_id", "centroid_id")
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      assert(got === expected)
-      assert(got.map(_._2).toSet.size > 1, "degenerate: all one list")
-    } finally q.stop()
-  }
 
   test("streamed arrivals APPEND into the persisted posting-list layout " +
     "(foreachBatch -> partitionBy(centroid_id) into the IndexStore dir) " +
@@ -513,245 +111,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(spark.read.parquet(lakeDir).count() === 7L)
   }
 
-  test("streamingListLoads: windowed per-list counts with the hot flag " +
-    "at the calibrated threshold") {
-    import graft.streaming.VectorStreamOps
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("vec_id", "ts", "centroid_id")
-    val q = VectorStreamOps.streamingListLoads(df,
-        expectedPerWindow = 10L, alertPpm = 200000L, window_ = "10 minutes")
-      .select(col("window.start").cast("string").as("w"),
-        col("centroid_id"), col("n_items"), col("hot"))
-      .writeStream.format("memory").queryName("loads")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      // list 1: 3 arrivals (3/10 > 20% -> hot); list 2: one (not hot)
-      mem.addData((1L, t(1), 1L), (2L, t(2), 1L), (3L, t(3), 1L),
-        (4L, t(4), 2L))
-      q.processAllAvailable()
-      val rows = spark.table("loads")
-        .as[(String, Long, Long, Boolean)].collect().sorted
-      assert(rows.toSeq === Seq(
-        ("2020-01-01 10:00:00", 1L, 3L, true),
-        ("2020-01-01 10:00:00", 2L, 1L, false)))
-    } finally q.stop()
-  }
-
-  test("streamingRebuildDecision: live arrivals x static skew flags " +
-    "emit the per-window quadrant action; unknown lists default " +
-    "not-skewed") {
-    import graft.streaming.VectorStreamOps
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Long)]
-    val df = mem.toDF().toDF("vec_id", "ts", "centroid_id")
-    // batch audit knows lists 1 and 4 (skewed) and 2; list 3 is post-audit
-    val health = Seq(("1", true), ("2", false), ("4", true))
-      .toDF("list_key", "skewed")
-    val q = VectorStreamOps.streamingRebuildDecision(df, health,
-        expectedPerWindow = 10L, alertPpm = 200000L, window_ = "10 minutes")
-      .select(col("list_key"), col("n_arrivals"), col("hot"), col("decision"))
-      .writeStream.format("memory").queryName("rebuild")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      // list 1: 3 arrivals (hot + skewed -> split_now); list 2: one
-      // (cold, balanced -> ok); list 3: 3 arrivals, unknown to the
-      // audit (hot, default not-skewed -> replicate)
-      mem.addData((1L, t(1), 1L), (2L, t(2), 1L), (3L, t(3), 1L),
-        (4L, t(4), 2L),
-        (5L, t(1), 3L), (6L, t(2), 3L), (7L, t(3), 3L),
-        (8L, t(5), 4L)) // skewed but cold -> rebalance
-      q.processAllAvailable()
-      val rows = spark.table("rebuild")
-        .as[(String, Long, Boolean, String)].collect().sorted
-      assert(rows.toSeq === Seq(
-        ("1", 3L, true, "split_now"),
-        ("2", 1L, false, "ok"),
-        ("3", 3L, true, "replicate"),
-        ("4", 1L, false, "rebalance")))
-    } finally q.stop()
-  }
-
-  test("streamingSourceOverlap: arriving near-dups of the indexed corpus " +
-    "count once per pair into per-window source-pair cells (multi-band " +
-    "collisions and in-watermark re-deliveries dedup); hot flags at the " +
-    "calibrated threshold") {
-    import graft.ops.Dedup
-    implicit val sc = spark.sqlContext
-    // static corpus + its band index, built by the BATCH index builder
-    val corpus = Seq(
-      (100L, "web", "alpha beta gamma delta"),
-      (101L, "web", "epsilon zeta eta theta"),
-      (102L, "books", "iota kappa lambda mu"))
-      .toDF("doc_id", "source", "text")
-    val idx = Dedup.minhashBands(corpus)
-    val srcs = corpus.select("doc_id", "source")
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "source", "text")
-    val q = EventStreamOps.streamingSourceOverlap(df, idx, srcs,
-        expectedPerWindow = 10L, alertPpm = 100000L, window_ = "10 minutes",
-        lateness = "5 minutes")
-      .select(col("window.start").cast("string").as("w"),
-        col("src_lo"), col("src_hi"), col("n_pairs"), col("hot"))
-      .writeStream.format("memory").queryName("soverlap")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      // two wiki docs duplicate two web docs (each collides in ALL 4
-      // bands -> must still count as ONE pair each); one books doc
-      // duplicates a books doc; one novel doc matches nothing
-      mem.addData(
-        (t(1), 1L, "wiki", "alpha beta gamma delta"),
-        (t(2), 2L, "wiki", "epsilon zeta eta theta"),
-        (t(3), 3L, "books", "iota kappa lambda mu"))
-      q.processAllAvailable()
-      // re-delivery of doc 1 inside the lateness window -> dropped
-      mem.addData(
-        (t(4), 1L, "wiki", "alpha beta gamma delta"),
-        (t(5), 4L, "wiki", "totally novel words here"))
-      q.processAllAvailable()
-      // advance the watermark past 10:10 + lateness to close the window:
-      // the watermark computed from a batch's max event time takes
-      // effect in the NEXT batch, and the chained stateful pair
-      // (dedup -> windowed agg) adds propagation lag of one more batch
-      // per operator — so drive three closing batches
-      mem.addData((t(25), 5L, "wiki", "unrelated closing noise"))
-      q.processAllAvailable()
-      mem.addData((t(26), 6L, "wiki", "more unrelated noise"))
-      q.processAllAvailable()
-      mem.addData((t(27), 7L, "wiki", "final unrelated noise"))
-      q.processAllAvailable()
-      val rows = spark.table("soverlap")
-        .as[(String, String, String, Long, Boolean)].collect().sorted
-      // web x wiki: 2 pairs = 20% of expected 10 > 10% threshold -> hot;
-      // books x books: 1 pair = 10%, not strictly above -> cold
-      assert(rows.toSeq === Seq(
-        ("2020-01-01 10:00:00", "books", "books", 1L, false),
-        ("2020-01-01 10:00:00", "web", "wiki", 2L, true)))
-    } finally q.stop()
-  }
-
-  test("streamingImportanceDrift: live DSIR scores match the batch " +
-    "scorer; per-window source means flag off-target drift; gram-less " +
-    "docs carry no evidence") {
-    import graft.ops.TextStats
-    implicit val sc = spark.sqlContext
-    // batch-side model: en docs are the target distribution
-    val raw = Seq(
-      (1L, "the cat sat", "en"),
-      (2L, "le chat noir", "fr"),
-      (3L, "the dog sat", "en")).toDF("doc_id", "text", "lang")
-    val table = TextStats.importanceRatioTable(
-      raw, raw.filter(col("lang") === "en"))
-    // expected per-text sum_lrq from the (batch-parity-pinned) serving
-    // path — the drift mean must be exactly their integer mean /1e4
-    val exp = Seq((1L, "the cat sat"), (2L, "the dog sat"),
-        (3L, "le chat noir")).toDF("doc_id", "text")
-      .select(col("doc_id") +: TextStats.importanceScoreColumns(table): _*)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val mem = MemoryStream[(java.sql.Timestamp, Long, String, String)]
-    val df = mem.toDF().toDF("ts", "doc_id", "source", "text")
-    val q = EventStreamOps.streamingImportanceDrift(df, table,
-        minLogw = 0.0, window_ = "10 minutes", lateness = "5 minutes")
-      .select(col("window.start").cast("string").as("w"), col("source"),
-        col("n_docs"), col("mean_logw"), col("off_target"))
-      .writeStream.format("memory").queryName("dsirdrift")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      // crawlA streams target-like text, crawlB streams off-target
-      // text plus a gram-less doc (must not dilute the mean)
-      mem.addData(
-        (t(1), 11L, "crawlA", "the cat sat"),
-        (t(2), 12L, "crawlA", "the dog sat"),
-        (t(3), 13L, "crawlB", "le chat noir"),
-        (t(4), 14L, "crawlB", ""))
-      q.processAllAvailable()
-      mem.addData((t(25), 15L, "crawlA", "closing noise"))
-      q.processAllAvailable()
-      mem.addData((t(26), 16L, "crawlA", "more closing noise"))
-      q.processAllAvailable()
-      val rows = spark.table("dsirdrift")
-        .as[(String, String, Long, Double, Boolean)].collect().sorted
-      val meanA = (exp(1L) + exp(2L)).toDouble / 2 / 10000
-      val meanB = exp(3L).toDouble / 1 / 10000
-      assert(rows.toSeq === Seq(
-        ("2020-01-01 10:00:00", "crawlA", 2L, meanA, false),
-        ("2020-01-01 10:00:00", "crawlB", 1L, meanB, true)))
-      assert(meanA > 0 && meanB < 0)
-    } finally q.stop()
-  }
-
-  test("streamingContamGate: the live embedding-decontamination screen " +
-    "rejects exactly the vectors the batch screen flags, with " +
-    "bit-identical best-match scoring (cos_q, bench_id, n_matches)") {
-    import graft.ops.Similarity
-    import graft.streaming.EmbedStreamOps
-    implicit val sc = spark.sqlContext
-    // deterministic 8-dim fixture: ids %100==0 play the benchmark
-    val all = (1 to 240).map { i =>
-      (i.toLong, Array.tabulate(8)(d => ((i * 13 + d * 7) % 19 - 9).toDouble))
-    }
-    val bench = all.filter(_._1 % 100 == 0)
-    val corpus = all.filterNot(_._1 % 100 == 0)
-    val batch = Similarity.embedContamination(
-        corpus.toDF("vec_id", "embedding"),
-        bench.toDF("vec_id", "embedding"),
-        thresholdQ = 8000L, dim = 8)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4)).toMap
-    assert(batch.nonEmpty, "fixture must flag something at 0.8")
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Array[Double])]
-    val q = EmbedStreamOps.streamingContamGate(mem.toDS(),
-        bench.toArray, thresholdQ = 8000L)
-      .writeStream.format("memory").queryName("cgate")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData(corpus.map { case (id, v) => (t((id % 50).toInt), id, v) })
-      q.processAllAvailable() // stateless: same-batch emission
-      val live = spark.table("cgate")
-        .select("vec_id", "best_bench", "cos_q", "n_matches", "pass")
-        .as[(Long, Option[Long], Option[Long], Long, Boolean)].collect()
-      assert(live.length === corpus.length, "every arrival is audited")
-      val flagged = live.filter(!_._5)
-        .map(r => r._1 -> (r._2.get, r._3.get, r._4)).toMap
-      assert(flagged === batch,
-        "live gate and batch screen must flag the same vectors with " +
-          "identical best matches")
-      // clear vectors pass with no match carried
-      assert(live.filter(_._5).forall(r => r._2.isEmpty && r._4 === 0L))
-    } finally q.stop()
-    // zero-norm parity: the batch screen's SQL division nulls a zero
-    // vector out of the match set; the live gate must treat it as "no
-    // match" too — even at a threshold every finite cosine clears
-    // (floor(NaN).toLong is 0, which a threshold <= 0 would flag)
-    val zeroId = 7000L
-    val probe = Seq((zeroId, Array.fill(8)(0.0)),
-      (7001L, Array.tabulate(8)(_.toDouble + 1)))
-    val batchLow = Similarity.embedContamination(
-        probe.toDF("vec_id", "embedding"),
-        bench.toDF("vec_id", "embedding"),
-        thresholdQ = -20000L, dim = 8)
-      .as[(Long, Long, Long, Long)].collect().map(_._1).toSet
-    assert(batchLow === Set(7001L), "batch drops the zero vector")
-    val mem2 = MemoryStream[(java.sql.Timestamp, Long, Array[Double])]
-    val q2 = EmbedStreamOps.streamingContamGate(mem2.toDS(),
-        bench.toArray, thresholdQ = -20000L)
-      .writeStream.format("memory").queryName("cgate0")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem2.addData(probe.map { case (id, v) => (t(1), id, v) })
-      q2.processAllAvailable()
-      val live0 = spark.table("cgate0").select("vec_id", "pass")
-        .as[(Long, Boolean)].collect().toMap
-      assert(live0(zeroId), "zero vector must pass (no match)")
-      assert(!live0(7001L), "finite vector still flags at floor threshold")
-    } finally q2.stop()
-  }
-
   test("streamingInferGate: the live batched classifier admits exactly " +
     "the docs the batch server scores into keepClass, with " +
     "bit-identical predictions and logits; null text fails closed") {
@@ -790,51 +149,6 @@ class StreamingOpsSpec extends SparkSpec {
         Seq(19L, 38L, 57L))
       assert(live.filter(_._2.isEmpty).forall(!_._4))
     } finally q.stop()
-  }
-
-  test("streamingAudioGate / streamingImageGate: the REAL decoders gate " +
-    "a live media feed statelessly (same-batch emission); undecodable, " +
-    "clipped, silent, and degenerate payloads fail closed") {
-    import graft.ops.Multimodal
-    import graft.streaming.MediaStreamOps
-    implicit val sc = spark.sqlContext
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-    val good = Multimodal.wavBytes(
-      Array.tabulate(64)(i => if (i % 2 == 0) 20000 else -20000))
-    val clipped = Multimodal.wavBytes(Array.fill(64)(32767))
-    val silent = Multimodal.wavBytes(Array.fill(64)(0))
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Array[Byte])]
-    val q = MediaStreamOps.streamingAudioGate(mem.toDS())
-      .writeStream.format("memory").queryName("agate")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem.addData((t(1), 1L, good), (t(2), 2L, clipped), (t(3), 3L, silent),
-        (t(4), 4L, "not audio".getBytes),
-        (t(5), 5L, Multimodal.wavBytes(Array.empty[Int])))
-      q.processAllAvailable() // stateless: everything emits immediately
-      val rows = spark.table("agate").select("doc_id", "n_samples", "pass")
-        .as[(Long, Option[Long], Boolean)].collect().sortBy(_._1)
-      assert(rows.map(r => r._1 -> r._3).toSeq === Seq(
-        1L -> true, 2L -> false, 3L -> false, 4L -> false, 5L -> false))
-      assert(rows(0)._2 === Some(64L)) // real decode, not just a verdict
-      assert(rows(3)._2 === None)      // undecodable carries no stats
-    } finally q.stop()
-    val mem2 = MemoryStream[(java.sql.Timestamp, Long, Array[Byte])]
-    val q2 = MediaStreamOps.streamingImageGate(mem2.toDS())
-      .writeStream.format("memory").queryName("igate")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      mem2.addData(
-        (t(1), 1L, Multimodal.bmpBytes(Array.fill(4)(0xFFFFFF), 2)),
-        (t(2), 2L, Multimodal.bmpBytes(Array.fill(4)(0x000000), 2)),
-        (t(3), 3L, "not an image".getBytes))
-      q2.processAllAvailable()
-      val rows2 = spark.table("igate").select("doc_id", "width", "pass")
-        .as[(Long, Option[Int], Boolean)].collect().sortBy(_._1)
-      assert(rows2.map(r => r._1 -> r._3).toSeq === Seq(
-        1L -> true, 2L -> false, 3L -> false))
-      assert(rows2(0)._2 === Some(2))
-    } finally q2.stop()
   }
 
   test("Bpe.encode tokenizes a STREAM unchanged: the frozen merge list " +
@@ -879,287 +193,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("latestStateStream matches the batch latest-state result on the " +
-    "same (bounded) input") {
-    val audit = Seq(
-      (1L, "a1", 1L), (1L, "a2", 3L), (2L, "b1", 2L)
-    ).toDF("user_id", "x", "audit_pk")
-    val out = EventStreamOps.latestStateStream(audit, Seq("user_id"))
-      .as[(Long, String, Long)].collect().sortBy(_._1)
-    assert(out.toSeq === Seq((1L, "a2", 3L), (2L, "b1", 2L)))
-  }
-
-  test("streamingFunnel: per-user live position advances greedily in " +
-    "time order, strictly-after semantics, across batches") {
-    implicit val sc = spark.sqlContext
-    import EventStreamOps.{FunnelEv, FunnelPos}
-    val mem = MemoryStream[FunnelEv]
-    val q = EventStreamOps.streamingFunnel(mem.toDS())
-      .writeStream.format("memory").queryName("funnel")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest() = spark.table("funnel").as[FunnelPos].collect()
-        .groupBy(_.userId).map { case (_, v) => v.last }
-        .map(p => p.userId -> p.step).toMap
-      // batch 1: u1 signup+view (order scrambled in-batch); u2 view
-      // before signup at the same 2 events -> view first can't count
-      mem.addData(FunnelEv(1L, "view", 20L), FunnelEv(1L, "signup", 10L),
-        FunnelEv(2L, "view", 5L), FunnelEv(2L, "signup", 8L))
-      q.processAllAvailable()
-      assert(latest() === Map(1L -> 2, 2L -> 1))
-      // batch 2: u1 completes click+purchase; u2's view at the SAME
-      // time as signup must NOT advance (strictly after); a later one
-      // does
-      mem.addData(FunnelEv(1L, "purchase", 40L), FunnelEv(1L, "click", 30L),
-        FunnelEv(2L, "view", 8L))
-      q.processAllAvailable()
-      assert(latest() === Map(1L -> 4, 2L -> 1))
-      mem.addData(FunnelEv(2L, "view", 9L))
-      q.processAllAvailable()
-      assert(latest() === Map(1L -> 4, 2L -> 2))
-    } finally q.stop()
-  }
-
-  test("streamingCmsCells: the live sketch equals the batch sketch over " +
-    "the stream prefix after every batch") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[String]
-    val df = mem.toDF().toDF("text")
-    val q = EventStreamOps.streamingCmsCells(df, depth = 2, width = 8)
-      .writeStream.format("memory").queryName("cms")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest() = spark.table("cms")
-        .as[(Int, Long, Long)].collect()
-        .groupBy(t => (t._1, t._2)).map { case (_, v) => v.last }.toSet
-      def batchCells(texts: Seq[String]) = {
-        val counts = texts.toDF("text")
-          .select(explode(graft.ops.TextStats.tokens(col("text"))).as("term"))
-          .groupBy("term").agg(count(lit(1)).as("c"))
-        graft.ops.Sketch.cmsCells(counts, "term", "c", 2, 8)
-          .as[(Int, Long, Long)].collect().toSet
-      }
-      val b1 = Seq("a a b", "c d")
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      assert(latest() === batchCells(b1))
-      val b2 = Seq("a e e e")
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      assert(latest() === batchCells(b1 ++ b2), "additivity across batches")
-    } finally q.stop()
-  }
-
-  test("streamingHllRegisters: the live distinct sketch equals the batch " +
-    "registers over the stream prefix after every batch") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[String]
-    val q = EventStreamOps.streamingHllRegisters(mem.toDF().toDF("text"), b = 4)
-      .writeStream.format("memory").queryName("hll")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest() = spark.table("hll")
-        .as[(Long, Int)].collect()
-        .groupBy(_._1).map { case (_, v) => v.last }.toSet
-      def batchRegs(texts: Seq[String]) = {
-        val grams = texts.toDF("text").select(
-          explode(graft.functions.WordNgrams(
-            graft.ops.TextStats.tokens(col("text")), 5)).as("g"))
-        graft.ops.Sketch.hllRegisters(grams, "g", b = 4)
-          .as[(Long, Int)].collect().toSet
-      }
-      val b1 = Seq("the quick brown fox jumps over the lazy dog",
-        "pack my box with five dozen liquor jugs")
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      assert(latest() === batchRegs(b1))
-      // duplicates of batch-1 text must be absorbed (max idempotence)
-      val b2 = Seq("the quick brown fox jumps over the lazy dog",
-        "sphinx of black quartz judge my vow today ok")
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      assert(latest() === batchRegs(b1 ++ b2), "idempotent max across batches")
-    } finally q.stop()
-  }
-
-  test("streamingSchemaDrift: a key outside the frozen allowlist " +
-    "surfaces once per (type, key); allowed keys, re-deliveries, and " +
-    "unparseable props stay silent") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, String)]
-    val df = mem.toDF().toDF("ts", "event_type", "props")
-    val allowed = Seq("click" -> "page", "view" -> "page")
-    val q = EventStreamOps.streamingSchemaDrift(df, allowed)
-      .writeStream.format("memory").queryName("drift")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      def t(min: Int) = java.sql.Timestamp.valueOf(f"2020-01-01 10:$min%02d:00")
-      mem.addData(
-        (t(1), "click", """{"page": "a"}"""),            // allowed
-        (t(1), "click", """{"page": "b", "ab_arm": "x"}"""), // NEW key
-        (t(2), "view", "not json at all"),               // silent
-        (t(2), "view", null.asInstanceOf[String]))       // silent
-      q.processAllAvailable()
-      // same rogue key again (in-watermark) + the same key on ANOTHER
-      // type (a distinct contract breach)
-      mem.addData(
-        (t(3), "click", """{"ab_arm": "y"}"""),
-        (t(4), "view", """{"ab_arm": "z"}"""))
-      q.processAllAvailable()
-      val rows = spark.table("drift")
-        .as[(java.sql.Timestamp, String, String)].collect()
-        .map(r => (r._2, r._3)).sorted.toSeq
-      assert(rows === Seq(("click", "ab_arm"), ("view", "ab_arm")))
-    } finally q.stop()
-  }
-
-  test("streamingBoilerplateScrub: the frozen common-line set scrubs a " +
-    "STREAM bit-identically to the batch removal over the same corpus") {
-    implicit val sc = spark.sqlContext
-    val corpus = Seq(
-      (1L, "COOKIE BANNER\nreal content one\nfooter (c) corp"),
-      (2L, "COOKIE BANNER\nother real text\nfooter (c) corp"),
-      (3L, "totally unique\nlines only here"),
-      (4L, "COOKIE BANNER\nfooter (c) corp"),
-      (5L, null.asInstanceOf[String]))
-    val static = corpus.toDF("doc_id", "text")
-    val frozen = graft.ops.TextStats.commonLineHashes(static, minDocs = 2)
-    assert(frozen.length === 2) // banner + footer
-    // the smallness premise is enforced, not argued: past maxHashes
-    // the collect throws with the remediation instead of flooding the
-    // driver (the collect itself is limit-capped plan-side)
-    val overflow = intercept[IllegalArgumentException] {
-      graft.ops.TextStats.commonLineHashes(static, minDocs = 2,
-        maxHashes = 1)
-    }.getMessage
-    assert(overflow.contains("raise minDocs"), overflow)
-    val batch = graft.ops.TextStats.removeBoilerplateLines(static, minDocs = 2)
-      .as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = EventStreamOps.streamingBoilerplateScrub(
-        mem.toDF().toDF("doc_id", "text"), frozen.toSeq)
-      .select("doc_id", "n_lines", "n_dropped", "clean_text")
-      .writeStream.format("memory").queryName("bp")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      corpus.grouped(2).foreach { g => // feed across several batches
-        mem.addData(g: _*); q.processAllAvailable()
-      }
-      val live = spark.table("bp")
-        .as[(Long, Long, Long, Option[String])].collect().sortBy(_._1).toSeq
-      assert(live === batch)
-    } finally q.stop()
-  }
-
-  test("streamingKmvSketch: the live bottom-k buffer equals the batch " +
-    "sketch over the prefix after every batch; re-deliveries are " +
-    "absorbed") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(String, String)]
-    val df = mem.toDF().toDF("source", "g")
-    val q = EventStreamOps.streamingKmvSketch(df, k = 8)
-      .writeStream.format("memory").queryName("kmv")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest() = spark.table("kmv")
-        .as[(String, Seq[Long])].collect().zipWithIndex
-        .groupBy(_._1._1).map { case (s, v) => s -> v.maxBy(_._2)._1._2 }
-      def batch(prefix: Seq[(String, String)]) =
-        graft.ops.Sketch.kmvSketch(
-          prefix.toDF("source", "g"), "g", 8, Seq("source"))
-          .as[(String, Seq[Long])].collect().toMap
-      val b1 = (1 to 20).map(i => ("a", s"k$i")) :+ (("b", "z1"))
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      assert(latest() === batch(b1))
-      val b2 = (10 to 30).map(i => ("a", s"k$i")) :+ (("b", "z2")) // overlap
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      assert(latest() === batch(b1 ++ b2), "idempotent merge across batches")
-      assert(latest()("a").size === 8, "buffer stays bounded at k")
-    } finally q.stop()
-  }
-
-  test("streamingHeartbeat: a silent key alarms once the watermark " +
-    "passes lastSeen+silence; active keys never alarm; a recovered key " +
-    "re-arms and alarms again") {
-    implicit val sc = spark.sqlContext
-    import EventStreamOps.{HbAlarm, HbEv}
-    // epoch-0 events would collide with the INITIAL watermark (0) and be
-    // dropped as late — start the clock at t=1000s
-    def ts(sec: Long) = new java.sql.Timestamp((1000L + sec) * 1000L)
-    val mem = MemoryStream[HbEv]
-    val q = EventStreamOps.streamingHeartbeat(mem.toDS(), silenceMs = 5000L)
-      .writeStream.format("memory").queryName("hb")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def alarms() = spark.table("hb").as[HbAlarm].collect().toSeq
-        .map(a => (a.key, a.lastSeenMs)).sorted
-      mem.addData(HbEv("k1", ts(0)), HbEv("k2", ts(0)))
-      q.processAllAvailable()
-      assert(alarms() === Seq.empty)
-      // k2 keeps beating; watermark moves far past k1's timer
-      mem.addData(HbEv("k2", ts(20)))
-      q.processAllAvailable()
-      mem.addData(HbEv("k2", ts(21))) // next trigger fires k1's timeout
-      q.processAllAvailable()
-      assert(alarms() === Seq(("k1", 1000000L)))
-      // k1 recovers — no immediate new alarm
-      mem.addData(HbEv("k1", ts(22)))
-      q.processAllAvailable()
-      assert(alarms() === Seq(("k1", 1000000L)))
-      // ... then vanishes again: second alarm with the NEW lastSeen
-      mem.addData(HbEv("k2", ts(40)))
-      q.processAllAvailable()
-      mem.addData(HbEv("k2", ts(41)))
-      q.processAllAvailable()
-      assert(alarms() === Seq(("k1", 1000000L), ("k1", 1022000L)))
-      assert(alarms().forall(_._1 != "k2"), "the live key never alarms")
-    } finally q.stop()
-  }
-
-  test("streamingWeightedTopK: after every batch each stratum's live " +
-    "reservoir equals the batch E-S top-k over the prefix; zero-weight " +
-    "rows never enter") {
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val df = mem.toDF().toDF("doc_id", "source", "w")
-    val k = 3
-    val q = EventStreamOps.streamingWeightedTopK(df, k = k)
-      .writeStream.format("memory").queryName("res")
-      .outputMode(OutputMode.Update()).start()
-    try {
-      def latest(): Map[String, Seq[(Long, Int)]] = spark.table("res")
-        .as[(String, Long, String, Int)].collect().zipWithIndex
-        .groupBy(t => (t._1._1, t._1._4)) // (source, rank) -> last emission
-        .map { case (_, v) => v.maxBy(_._2)._1 }
-        .groupBy(_._1)
-        .map { case (s, v) =>
-          s -> v.toSeq.sortBy(_._4).map(r => (r._2, r._4))
-        }
-      def batchTop(prefix: Seq[(Long, String, Long)]): Map[String, Seq[(Long, Int)]] =
-        prefix.map(_._2).distinct.map { s =>
-          val top = graft.ops.Sampling.weightedTopK(
-            prefix.filter(_._2 == s).toDF("doc_id", "source", "w"),
-            "doc_id", col("w"), k)
-            .select("doc_id").as[Long].collect().toSeq
-          s -> top.zipWithIndex.map { case (id, i) => (id, i + 1) }
-        }.toMap
-      val b1 = Seq((1L, "a", 5L), (2L, "a", 1L), (3L, "a", 9L),
-        (4L, "b", 2L), (5L, "a", 0L)) // doc 5: zero tickets
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      assert(latest() === batchTop(b1))
-      assert(!latest()("a").map(_._1).contains(5L))
-      // batch 2 displaces: heavier rows push earlier winners out
-      val b2 = Seq((6L, "a", 30L), (7L, "a", 30L), (8L, "b", 7L))
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      assert(latest() === batchTop(b1 ++ b2), "prefix parity after displacement")
-      assert(latest()("a").size === k, "reservoir stays exactly k")
-    } finally q.stop()
-  }
-
   test("ingestGate on a STREAM: the stateless projection gates batches " +
     "bit-identically to the batch gate over the same docs") {
     implicit val sc = spark.sqlContext
@@ -1190,36 +223,6 @@ class StreamingOpsSpec extends SparkSpec {
         .as[(Long, Boolean, Boolean, Boolean, Boolean, Boolean, Boolean)]
         .collect().sortBy(_._1).toSeq
       assert(live === batch)
-    } finally q.stop()
-  }
-
-
-  test("streamingLinkage: arriving records match the frozen master " +
-    "block-by-block, bit-identically to the batch linkage definition") {
-    implicit val sc = spark.sqlContext
-    val master = Seq((100L, "x", "abc"), (101L, "x", "abq"),
-      (102L, "y", "abc"), (103L, "x", "zzzzzz"))
-      .toDF("id", "blk", "nm")
-    // (id, blk, nm) arriving records
-    val recs = Seq(
-      (1L, "x", "abd"),    // matches 100 (d1) and 101 (d1: d→q)
-      (2L, "y", "abc"),    // exact match 102, same-block only
-      (3L, "x", "qqqq"),   // no match
-      (4L, "z", "abc"))    // unknown block
-    val expected = Seq(
-      ("x", 1L, 100L, 1), ("x", 1L, 101L, 1), ("y", 2L, 102L, 0))
-    val mem = MemoryStream[(Long, String, String)]
-    val q = EventStreamOps.streamingLinkage(
-        mem.toDF().toDF("id", "blk", "nm"), master,
-        "blk", "id", "nm", maxDist = 2)
-      .writeStream.format("memory").queryName("lnk")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      recs.grouped(2).foreach { g => mem.addData(g: _*); q.processAllAvailable() }
-      val live = spark.table("lnk")
-        .select("block", "rec_id", "master_id", "dist")
-        .as[(String, Long, Long, Int)].collect().sortBy(r => (r._2, r._3)).toSeq
-      assert(live === expected)
     } finally q.stop()
   }
 
