@@ -90,6 +90,25 @@ object Bench {
     (runs.map(_ -- failed.keySet), failed.toMap)
   }
 
+  /** This run's regression reference in `dir`: the file a full run
+    * writes (`bench_ref_<sf>_c<cpus>.json`), the file the prior is read
+    * from, and whether that prior is SEEDED. Before the reference was
+    * keyed by core count there was one sf-only file; when no cpu-keyed
+    * file exists yet, that file seeds the prior. Scaling is not flat
+    * for scheduling-bound queries, so a seeded run's `regressed` flags
+    * may compare across core counts — `"ref_seeded":true` in the line
+    * and in bench_full.json says so.
+    */
+  private[graft] def regressionRef(dir: java.nio.file.Path, sfDir: String,
+                                   cpus: Int): (java.nio.file.Path, java.nio.file.Path, Boolean) = {
+    val base = "bench_ref_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    val keyed = dir.resolve(base + s"_c$cpus.json")
+    val sfOnly = dir.resolve(base + ".json")
+    if (java.nio.file.Files.exists(keyed) || !java.nio.file.Files.exists(sfOnly))
+      (keyed, keyed, false)
+    else (keyed, sfOnly, true)
+  }
+
   /** The one stdout result line. Slowest queries first, as many as fit
     * in [[MaxLineChars]] (`total` always covers every clean query;
     * `dropped` counts the elided ones); `failed` counts the queries
@@ -204,21 +223,14 @@ object Bench {
     // instead of hiding inside a growing suite total. New queries
     // have no reference and never flag. Only FULL runs update the
     // reference (below); subset runs read it but leave it untouched.
-    // Migration: when no cpu-keyed ref exists yet, the old sf-only
-    // file seeds the prior (scaling is ~flat at these fixture sizes,
-    // so a one-round cross-cpu seed beats an empty guard).
-    val refBase = "bench_ref_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val refPath = refBase + s"_c$cpus.json"
-    val refReadPath =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(refPath))) refPath
-      else refBase + ".json"
+    val (refPath, refReadPath, refSeeded) =
+      regressionRef(java.nio.file.Paths.get("."), sfDir, cpus)
     val prior: Map[String, Double] =
       try {
         import org.json4s._
         import org.json4s.jackson.JsonMethods
-        val f = java.nio.file.Paths.get(refReadPath)
-        if (!java.nio.file.Files.exists(f)) Map.empty
-        else JsonMethods.parse(java.nio.file.Files.readString(f)) \ "queries" match {
+        if (!java.nio.file.Files.exists(refReadPath)) Map.empty
+        else JsonMethods.parse(java.nio.file.Files.readString(refReadPath)) \ "queries" match {
           case JObject(fields) => fields.collect {
             case (k, JDouble(v)) => k -> v
             case (k, JInt(v))    => k -> v.toDouble
@@ -279,7 +291,7 @@ object Bench {
         if (only.nonEmpty) "bench_full_subset.json"
         else if (loadedArtifacts == 0) "bench_full.json"
         else "bench_full_warm.json"
-      s""""regressed":$reg,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir""""
+      s""""regressed":$reg,"ref_seeded":$refSeeded,"epoch":${fmt(epochFactor)},"memo_sec":${fmt(memoSec)},"full":"$fullRef","sf":"$sfDir""""
     }
 
     // Full-precision record to disk (survives any stdout truncation).
@@ -335,12 +347,12 @@ object Bench {
         else if (coldFull) "bench_full.json"
         else "bench_full_warm.json"
       val w = new java.io.PrintWriter(fullName, "UTF-8")
-      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"failed":$failedJson,"prewarm_wall":$prewarmWall,"epoch":$epochFactor,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"failed":$failedJson,"prewarm_wall":$prewarmWall,"ref_seeded":$refSeeded,"epoch":$epochFactor,"sf":"$sfDir"}""")
       finally w.close()
       // a FULL COLD run becomes the next run's per-sf regression
       // reference; subset and warm-artifact runs never touch it
       if (only.isEmpty && coldFull) {
-        val r = new java.io.PrintWriter(refPath, "UTF-8")
+        val r = new java.io.PrintWriter(refPath.toFile, "UTF-8")
         try r.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"sf":"$sfDir"}""")
         finally r.close()
       }

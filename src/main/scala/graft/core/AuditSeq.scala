@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Dense, monotonic `audit_pk` assignment — the Spark analog of the
   * reference's per-table `auto_increment` sequence
@@ -15,15 +15,19 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * Two implementations (SURVEY.md §4, §7.4.1):
   *
   *  - [[assign]] — scale path. Global range-sort on the order columns,
-  *    then `RDD.zipWithIndex` per-partition offsets: one lightweight
-  *    count job over the sorted partitions computes cumulative
-  *    offsets, then indexes stamp per-partition in parallel. No
-  *    single-partition bottleneck. The RDD hop is deliberate: a pure
-  *    Catalyst formulation (spark_partition_id + offset join) is
-  *    UNSOUND under AQE, which may coalesce the range exchange
-  *    differently in the count job and the stamping job, silently
-  *    remapping partition ids between the two — zipWithIndex walks one
-  *    materialized RDD, so its two jobs always agree.
+  *    then per-partition offsets ([[prefixStamp]]): the input is
+  *    evaluated ONCE (a lazy local checkpoint, filled by the range
+  *    sort's sampling job and read back by its shuffle-map job — without
+  *    it both jobs re-ran the upstream, e.g. capture's full-outer
+  *    join), one count job over all sorted partitions but the last
+  *    computes cumulative offsets (none with one partition), then
+  *    indexes stamp per-partition in parallel. No single-partition
+  *    bottleneck. The RDD hop is deliberate: a pure Catalyst
+  *    formulation (spark_partition_id + offset join) is UNSOUND under
+  *    AQE, which may coalesce the range exchange differently in the
+  *    count job and the stamping job, silently remapping partition ids
+  *    between the two — the walk reads one materialized RDD, so its
+  *    two jobs always agree.
   *
   *  - [[assignWindowed]] — small-data path with whole-stage-codegen:
   *    `row_number()` over an un-partitioned window. Spark plans this as
@@ -41,14 +45,41 @@ object AuditSeq {
     * `orderCols`. Scale path — see object doc.
     */
   def assign(df: DataFrame, orderCols: Seq[Column], base: Long = 0L,
-             pkName: String = AuditSchema.PkCol): DataFrame = {
-    val sorted = df.orderBy(orderCols: _*)
-    val schema = StructType(sorted.schema.fields :+
-      org.apache.spark.sql.types.StructField(pkName, LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ (base + idx + 1L))
+             pkName: String = AuditSchema.PkCol): DataFrame =
+    prefixStamp(df, orderCols, Seq(StructField(pkName, LongType, nullable = false)))(
+      _ => 1L)((_, before) => Seq(base + before + 1L))
+
+  /** The sorted walk behind [[assign]] and `Pack.packSequences`:
+    * range-sort `df` by `orderCols` and append `stampFields`, computed
+    * per row by `stamp(row, before)` where `before` is the sum of
+    * `weight` over every earlier row in the global order. `df` is
+    * evaluated once; see the object doc for the job plan and why the
+    * walk is an RDD.
+    */
+  private[graft] def prefixStamp(df: DataFrame, orderCols: Seq[Column],
+                                 stampFields: Seq[StructField])
+                                (weight: Row => Long)
+                                (stamp: (Row, Long) => Seq[Any]): DataFrame = {
+    val sorted = df.localCheckpoint(eager = false).orderBy(orderCols: _*)
+    val rdd = sorted.rdd
+    // per-partition weight totals; the last partition's total is never
+    // needed, so a one-partition sort runs no job here
+    val totals =
+      if (rdd.getNumPartitions <= 1) Array.empty[Long]
+      else sorted.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[Row]) => it.foldLeft(0L)((s, r) => s + weight(r)),
+        0 until rdd.getNumPartitions - 1)
+    val offsets = totals.scanLeft(0L)(_ + _) // offsets(pid) = weight before pid
+    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
+      var before = offsets(pid)
+      it.map { r =>
+        val out = Row.fromSeq(r.toSeq ++ stamp(r, before))
+        before += weight(r)
+        out
+      }
     }
-    sorted.sparkSession.createDataFrame(rdd, schema)
+    sorted.sparkSession.createDataFrame(stamped,
+      StructType(sorted.schema.fields ++ stampFields))
   }
 
   /** Append a dense `audit_pk` via an un-partitioned window —

@@ -21,18 +21,15 @@ object Retention {
     * exact post-condition (never deletes the max row,
     * cdc_audit_sync_mysql.php:304-308).
     *
-    * Implemented as an aggregate + broadcast semi-join rather than a
-    * global sort: `max(audit_pk)` is a cheap partial-aggregated scan,
-    * and the single-row result broadcasts, so at 100 TB this is one
-    * pass over column stats (parquet footers can even answer the max
-    * without reading data pages) + one pruned scan.
+    * A top-1 rather than a global sort or a max-aggregate + broadcast
+    * join: collected, Spark plans it as one job of per-partition top-1
+    * candidates merged on the driver — one pass over the log, no
+    * shuffle, nothing broadcast. `audit_pk` is a unique sequence, so
+    * the newest row is one row; null keys are never the newest.
     */
   def keepLastGlobal(log: DataFrame,
-                     pkCol: String = AuditSchema.PkCol): DataFrame = {
-    val maxPk = log.agg(max(col(pkCol)).as("__max_pk"))
-    log.join(broadcast(maxPk), col(pkCol) === col("__max_pk"))
-      .drop("__max_pk")
-  }
+                     pkCol: String = AuditSchema.PkCol): DataFrame =
+    log.filter(col(pkCol).isNotNull).orderBy(col(pkCol).desc).limit(1)
 
   /** Per-source-key variant: keep each key's latest audit row (the
     * "current state" materialization, SURVEY.md §2.4 extensions).
@@ -60,9 +57,9 @@ object Retention {
     * Column so both timestamp logs (`expr("INTERVAL 7 DAYS")`) and
     * long-nanos logs (`lit(7*86400*1000000000L)`) subtract natively.
     *
-    * Same scale shape as [[keepLastGlobal]]: one partial-aggregated
-    * bounds probe (answerable from parquet footers), broadcast back
-    * over one pruned scan — no shuffle of the log itself.
+    * Scale shape: one partial-aggregated bounds probe (answerable from
+    * parquet footers), broadcast back over one pruned scan — no
+    * shuffle of the log itself.
     */
   def keepYoungerThan(log: DataFrame, maxAge: Column,
                       pkCol: String = AuditSchema.PkCol,

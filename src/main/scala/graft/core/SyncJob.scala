@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 
 /** Incremental watermark sync: audit log -> CSV sink (SURVEY.md §2.1
@@ -64,8 +65,7 @@ object SyncJob {
       spark.sparkContext.hadoopConfiguration)
     val path = new org.apache.hadoop.fs.Path(sinkDir)
     if (!fs.exists(path)) return initial
-    val files = fs.listStatus(path).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".csv"))
+    val files = csvParts(fs, path)
     if (files.isEmpty) return initial
     readSidecar(fs, path) match {
       case Some((wm, cnt)) if cnt == files.length => wm
@@ -118,8 +118,7 @@ object SyncJob {
                            knownCsvCount: Int = -1): Unit = {
     val csvCount =
       if (knownCsvCount >= 0) knownCsvCount
-      else fs.listStatus(sinkPath).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".csv"))
+      else csvParts(fs, sinkPath).length
     val out = fs.create(new org.apache.hadoop.fs.Path(sinkPath, WatermarkFile), true)
     try out.write(s"$wm,$csvCount\n".getBytes("UTF-8"))
     finally out.close()
@@ -134,18 +133,34 @@ object SyncJob {
     log.filter(col(pkCol) > lit(wm))
 
   /** Column names of an existing CSV sink (header row), or None if the
-    * sink is empty/absent.
+    * sink is empty/absent. The header line of the first non-empty part
+    * is read through the Hadoop FS and parsed by Spark's own CSV
+    * reader code under [[CsvOptions]], so the answer is what a Spark
+    * CSV read reports — without its job and its file-index listing of
+    * the growing sink.
     */
   def sinkColumns(spark: SparkSession, sinkDir: String): Option[Seq[String]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(conf)
     val path = new org.apache.hadoop.fs.Path(sinkDir)
     if (!fs.exists(path)) return None
-    val files = fs.listStatus(path).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".csv"))
-    if (files.isEmpty) None
-    else Some(spark.read.options(CsvOptions).csv(sinkDir).columns.toSeq)
+    val opts = new org.apache.spark.sql.catalyst.csv.CSVOptions(
+      CsvOptions, false, spark.sessionState.conf.sessionLocalTimeZone)
+    csvParts(fs, path).iterator
+      .flatMap(f => CSVUtils.readHeaderLine(f.getPath, opts, conf))
+      .nextOption()
+      .map { line =>
+        val fields = new com.univocity.parsers.csv.CsvParser(opts.asParserSettings)
+          .parseLine(line)
+        CSVUtils.makeSafeHeader(fields,
+          spark.sessionState.conf.caseSensitiveAnalysis, opts).toSeq
+      }
   }
+
+  private def csvParts(fs: org.apache.hadoop.fs.FileSystem,
+                       sinkPath: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(sinkPath).filter(f =>
+      f.isFile && f.getPath.getName.endsWith(".csv"))
 
   /** One sync run for one table: read watermark from the sink, append
     * everything above it. Returns the number of rows delivered.
@@ -163,28 +178,38 @@ object SyncJob {
           s"but the audit log has ${log.columns.mkString(",")}")
     }
     val wm = watermark(spark, sinkDir)
-    // SNAPSHOT the batch (eager localCheckpoint): the stats aggregate
-    // and the sink write are separate actions, and against a LIVE
-    // source (the JDBC poller's table) a second evaluation could see
-    // rows the recorded watermark doesn't cover — delivered-but-
-    // uncovered rows would re-deliver on the next poll. One
-    // materialization feeds both actions, so sidecar and sink always
-    // agree.
-    val fresh = above(log, wm).localCheckpoint()
-    val stats = fresh.agg(count(lit(1)), max(col(AuditSchema.PkCol).cast("long"))).head()
-    val n     = stats.getLong(0)
-    if (n > 0) {
-      val ordered = fresh.orderBy(col(AuditSchema.PkCol))
-      val out     = if (singleFile) ordered.coalesce(1) else ordered
-      out.write.mode("append").options(CsvOptions).csv(sinkDir)
-      // advance the O(1) watermark sidecar only after the append
-      // commits; a crash in between leaves a count mismatch, which the
-      // next run detects and repairs with a full scan
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      writeSidecar(fs, new org.apache.hadoop.fs.Path(sinkDir), stats.getLong(1))
-    }
-    n
+    // SNAPSHOT the batch: the stats and the sink write are separate
+    // actions, and against a LIVE source (the JDBC poller's table) a
+    // second evaluation could see rows the recorded watermark doesn't
+    // cover — delivered-but-uncovered rows would re-deliver on the next
+    // poll. One materialization feeds both actions, so sidecar and
+    // sink always agree. The checkpoint is lazy: the one stats job
+    // below fills it, the write reads it back.
+    val fresh = above(log, wm).localCheckpoint(eager = false)
+    try {
+      // (rows, max audit_pk) per partition
+      val parts = fresh.select(col(AuditSchema.PkCol).cast("long"))
+        .queryExecution.toRdd
+        .mapPartitions { it =>
+          var n = 0L
+          var mx = Long.MinValue
+          it.foreach { r => n += 1; if (!r.isNullAt(0)) mx = math.max(mx, r.getLong(0)) }
+          Iterator.single((n, mx))
+        }.collect()
+      val n = parts.map(_._1).sum
+      if (n > 0) {
+        val ordered = fresh.orderBy(col(AuditSchema.PkCol))
+        val out     = if (singleFile) ordered.coalesce(1) else ordered
+        out.write.mode("append").options(CsvOptions).csv(sinkDir)
+        // advance the O(1) watermark sidecar only after the append
+        // commits; a crash in between leaves a count mismatch, which the
+        // next run detects and repairs with a full scan
+        val fs = org.apache.hadoop.fs.FileSystem.get(
+          spark.sparkContext.hadoopConfiguration)
+        writeSidecar(fs, new org.apache.hadoop.fs.Path(sinkDir), parts.map(_._2).max)
+      }
+      n
+    } finally org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(fresh)
   }
 
   /** Full reference `sync_audit_tables` orchestration: filter the table
@@ -267,8 +292,10 @@ object SyncJob {
     * deletes leaves extra already-delivered rows behind — benign (the
     * next wipe removes them); the newest row is never without a live
     * file. Returns the number of rows retained (1, or 0 for an empty
-    * log). `afterSnapshot` is a test seam fired between the listing
-    * and the deletes (to exercise a concurrent append).
+    * log). Keep-last runs three Spark jobs: the log's schema, one top-1
+    * and the one-row write. `afterSnapshot` is a test seam fired
+    * between the listing and the deletes (to exercise a concurrent
+    * append).
     *
     * A partitioned log ([[AuditLake.writePartitionedLog]]) keeps its
     * part files in sub-directories this snapshot never lists; the
@@ -293,22 +320,30 @@ object SyncJob {
       f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
     if (snapshot.isEmpty) return 0L
     val log  = spark.read.parquet(snapshot.toIndexedSeq.map(_.toString): _*)
-    // default = the reference wipe (keep only the newest row); maxAge =
-    // its @TODO form (keep the trailing age window + the newest row)
-    val kept = maxAge.fold(Retention.keepLastGlobal(log))(a =>
-      Retention.keepYoungerThan(log, a))
     val tmp  = new org.apache.hadoop.fs.Path(logDir + ".wipe.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
-    // keep-last retains ONE row — a single part file is right. The age
-    // window can retain nearly the whole log, so funneling it through
-    // one task/one file would bottleneck the exact feature being used;
-    // size the rewrite to the snapshot instead (≤ one output file per
-    // source file — compaction never inflates the file count).
-    val rewritten =
-      if (maxAge.isEmpty) kept.coalesce(1)
-      else kept.coalesce(math.max(1, snapshot.length))
-    rewritten.write.mode("overwrite").parquet(tmp.toString)
-    val n = spark.read.parquet(tmp.toString).count()
+    val n = maxAge match {
+      // the reference wipe: keep only the newest row. One top-1 job
+      // brings it to the driver, where its count is known; the rewrite
+      // is that one row (or, for an empty log, an empty file that keeps
+      // the schema)
+      case None =>
+        val newest = Retention.keepLastGlobal(log).collect()
+        spark.createDataFrame(java.util.Arrays.asList(newest: _*), log.schema)
+          .write.mode("overwrite").parquet(tmp.toString)
+        newest.length.toLong
+      // its @TODO form: keep the trailing age window + the newest row.
+      // The window can retain nearly the whole log, so funneling it
+      // through one task/one file would bottleneck the exact feature
+      // being used; size the rewrite to the snapshot instead (≤ one
+      // output file per source file — compaction never inflates the
+      // file count).
+      case Some(age) =>
+        Retention.keepYoungerThan(log, age)
+          .coalesce(math.max(1, snapshot.length))
+          .write.mode("overwrite").parquet(tmp.toString)
+        spark.read.parquet(tmp.toString).count()
+    }
     afterSnapshot()
     // move the kept row in BEFORE deleting its sources: the log is
     // never missing its newest row, whatever happens mid-wipe. Hadoop

@@ -464,7 +464,7 @@ object Dedup {
     // over the DICTIONARY (one row per distinct gram — vocabulary-
     // bounded); downstream, 1.5M-row shuffles and the candidate
     // equi-join carry/compare a 4-byte int instead of (long, string).
-    // AuditSeq.assign (range-sort + zipWithIndex stamping) rather than
+    // AuditSeq.assign (range-sort + per-partition offset stamping) rather than
     // an unpartitioned row_number window: same dense (df, g) order —
     // (df, g) is a unique key, g is distinct post-agg — but the sort
     // stays N-way parallel and the dictionary never funnels through

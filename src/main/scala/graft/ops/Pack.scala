@@ -1,8 +1,9 @@
 package graft.ops
 
+import graft.core.AuditSeq
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Training-sequence packing: lay the corpus's chunks end-to-end on one
   * global token axis and assign each chunk to the fixed-budget training
@@ -21,18 +22,18 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * sequence-packing pipelines that slice a concatenated token stream
   * produce anyway.
   *
-  * Implementation = the [[graft.core.AuditSeq.assign]] pattern
-  * generalized from row counts to WEIGHTED sums: one global range sort
-  * (N-way parallel), one lightweight job computing per-partition token
-  * subtotals (numPartitions longs to the driver — bounded by cluster
-  * width, not data), then a parallel per-partition stamping pass whose
-  * running sum starts at the partition's cumulative offset. Both jobs
-  * walk the SAME materialized RDD, so partition boundaries agree (the
-  * same AQE-soundness argument as AuditSeq: a spark_partition_id-based
-  * Catalyst formulation could be re-coalesced differently between the
-  * two jobs). No single-partition stage anywhere — the un-partitioned
-  * window form (`sum over rows unbounded preceding`) computes the same
-  * numbers but serializes the whole corpus through one task.
+  * Implementation = [[graft.core.AuditSeq.prefixStamp]], the walk
+  * behind `AuditSeq.assign`, with token counts as the weight instead of
+  * 1: one global range sort (N-way parallel) over the input evaluated
+  * once, one lightweight job computing per-partition token subtotals
+  * (numPartitions longs to the driver — bounded by cluster width, not
+  * data), then a parallel per-partition stamping pass whose running
+  * sum starts at the partition's cumulative offset. Both jobs walk the
+  * SAME materialized RDD, so partition boundaries agree (AuditSeq's
+  * AQE-soundness argument). No single-partition stage anywhere — the
+  * un-partitioned window form (`sum over rows unbounded preceding`)
+  * computes the same numbers but serializes the whole corpus through
+  * one task.
   *
   * The result is a pure function of (row set, orderCols, budget):
   * partitioning of the input does not affect the output.
@@ -77,8 +78,7 @@ object Pack {
                     orderCols: Seq[String] = Seq("doc_id", "chunk_idx"),
                     tokenCol: String = "n_tokens"): DataFrame = {
     require(budget >= 1, "budget must be >= 1")
-    val sorted = chunks.orderBy(orderCols.map(col): _*)
-    val tokIdx = sorted.columns.indexOf(tokenCol)
+    val tokIdx = chunks.columns.indexOf(tokenCol)
     require(tokIdx >= 0, s"missing token column $tokenCol")
     // a null token count contributes 0 tokens (the chunk still gets a
     // position on the axis) — stamping must never NPE mid-stream
@@ -88,29 +88,10 @@ object Pack {
       case other => throw new IllegalArgumentException(
         s"token column $tokenCol must be numeric, got $other")
     }
-    val rdd = sorted.rdd
-    // job 1: per-partition token subtotals -> cumulative start offsets
-    val subtotals = rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach(r => s += tokensOf(r))
-        Iterator((pid, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = subtotals.scanLeft(0L)(_ + _) // offsets(pid) = tokens before pid
-    // job 2: stamp in parallel from each partition's offset
-    val schema = StructType(sorted.schema.fields ++ Seq(
+    AuditSeq.prefixStamp(chunks, orderCols.map(col), Seq(
       StructField("tok_start", LongType, nullable = false),
       StructField("seq_id", LongType, nullable = false),
-      StructField("seq_offset", LongType, nullable = false)))
-    val stamped = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var running = offsets(pid)
-      it.map { r =>
-        val start = running
-        running += tokensOf(r)
-        Row.fromSeq(r.toSeq ++ Seq(start, start / budget, start % budget))
-      }
-    }
-    sorted.sparkSession.createDataFrame(stamped, schema)
+      StructField("seq_offset", LongType, nullable = false)))(tokensOf)(
+      (_, start) => Seq(start, start / budget, start % budget))
   }
 }

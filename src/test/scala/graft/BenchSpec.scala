@@ -42,4 +42,22 @@ class BenchSpec extends SparkSpec {
     // the slowest queries are the ones that survive
     assert(shown.map(_._1).contains("q_query_400"))
   }
+
+  test("a prior seeded from the sf-only reference is marked ref_seeded " +
+    "in the line; a cpu-keyed or absent prior is not") {
+    val dir = java.nio.file.Files.createTempDirectory("bench-ref")
+    val keyed = dir.resolve("bench_ref__data_sf0.1_c8.json")
+    val sfOnly = dir.resolve("bench_ref__data_sf0.1.json")
+    assert(Bench.regressionRef(dir, "/data/sf0.1", 8) === ((keyed, keyed, false)))
+    java.nio.file.Files.writeString(sfOnly, "{}")
+    assert(Bench.regressionRef(dir, "/data/sf0.1", 8) === ((keyed, sfOnly, true)))
+    java.nio.file.Files.writeString(keyed, "{}")
+    assert(Bench.regressionRef(dir, "/data/sf0.1", 8) === ((keyed, keyed, false)))
+
+    val results = (1 to 400).map(i => f"q_query_$i%03d" -> i / 100.0).toMap
+    val line = Bench.resultLine(results.values.sum, results, failed = 0,
+      "\"regressed\":{},\"ref_seeded\":true,\"epoch\":1.0,\"sf\":\"/data/sf0.1\"")
+    assert(line.length <= 1200, line.length)
+    assert(JsonMethods.parse(line) \ "ref_seeded" === JBool(true))
+  }
 }
