@@ -1,5 +1,6 @@
 package graft
 import graft.queries.FrameMemo
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
@@ -54,15 +55,21 @@ object Bench {
   /** Times every query once per pass, passes iterating over the WHOLE
     * list before repeating (a transient host stall can't hit both
     * observations of the same query). Returns the per-pass times of
-    * the queries that ran clean in every pass, and the first error of
-    * each query that threw: a thrown query has no time, so it never
-    * enters the min, the total or the regression reference.
+    * the queries that ran clean in every pass, the first error of
+    * each query that threw (a thrown query has no time, so it never
+    * enters the min, the total or the regression reference), and the
+    * codegen ledger: per pass, the classes each clean query compiled
+    * inside its window. A query whose count stays above 0 after the
+    * first pass generates different code on every call (e.g. a
+    * per-call value inlined as a literal) and pays a compile each time.
     */
   private[graft] def timeQueries(spark: SparkSession, sfDir: String,
                                  selected: Seq[(String, Query)],
-                                 passes: Int): (Seq[Map[String, Double]], Map[String, String]) = {
+                                 passes: Int)
+      : (Seq[Map[String, Double]], Map[String, String], Seq[Map[String, Long]]) = {
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOne(name: String, fn: Query): Option[Double] =
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def timeOne(name: String, fn: Query): Option[(Double, Long)] =
       // the checkpoint sweep runs after this window closes: untimed,
       // and each invocation rebuilds its own checkpoints, so measured
       // work is unchanged
@@ -72,13 +79,14 @@ object Bench {
         // forensics that tells "plan got slower" apart from "memo
         // build cost moved to a different first consumer"
         FrameMemo.currentConsumer.set(name)
+        val c0 = compiled
         val t0 = System.nanoTime()
         // noop-format write forces full evaluation of every output
         // column (count() lets Catalyst prune unused projections,
         // under-measuring map-only queries) with no driver transfer
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9)
+          Some(((System.nanoTime() - t0) / 1e9, compiled - c0))
         } catch { case e: Throwable =>
           failed.getOrElseUpdate(name, e.toString)
           None
@@ -86,8 +94,9 @@ object Bench {
       }
     val runs = (1 to passes).map { _ =>
       selected.flatMap { case (n, f) => timeOne(n, f).map(n -> _) }.toMap
-    }
-    (runs.map(_ -- failed.keySet), failed.toMap)
+    }.map(_ -- failed.keySet)
+    (runs.map(_.map { case (n, (t, _)) => n -> t }), failed.toMap,
+      runs.map(_.map { case (n, (_, c)) => n -> c }))
   }
 
   /** This run's regression reference in `dir`: the file a full run
@@ -239,7 +248,7 @@ object Bench {
         }
       } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-    val (runs, failed) = timeQueries(spark, sfDir, selected.toSeq, passes)
+    val (runs, failed, compiles) = timeQueries(spark, sfDir, selected.toSeq, passes)
     failed.foreach { case (n, e) => System.err.println(s"[bench] $n failed: $e") }
     val results: Map[String, Double] =
       selected.keys.filterNot(failed.contains)
@@ -315,6 +324,10 @@ object Bench {
     }.mkString("[", ",", "]")
     val failedJson = failed.map { case (n, e) => s"${jstr(n)}:${jstr(e)}" }
       .mkString("{", ",", "}")
+    // codegen ledger: classes compiled in each pass, per query
+    val compilesJson = results.keys.toSeq.sorted
+      .map(n => "\"" + n + "\":" + compiles.map(_(n)).mkString("[", ",", "]"))
+      .mkString("{", ",", "}")
     // a WARM-artifact run's per-query times exclude the index builds a
     // cold run pays, so it must never become the cold regression
     // reference or rotate the cold ring (a later cold run would flag
@@ -347,7 +360,7 @@ object Bench {
         else if (coldFull) "bench_full.json"
         else "bench_full_warm.json"
       val w = new java.io.PrintWriter(fullName, "UTF-8")
-      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"memo_builds":$memoJson,"failed":$failedJson,"prewarm_wall":$prewarmWall,"ref_seeded":$refSeeded,"epoch":$epochFactor,"sf":"$sfDir"}""")
+      try w.println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$full,"passes":$passesJson,"compiles":$compilesJson,"memo_builds":$memoJson,"failed":$failedJson,"prewarm_wall":$prewarmWall,"ref_seeded":$refSeeded,"epoch":$epochFactor,"sf":"$sfDir"}""")
       finally w.close()
       // a FULL COLD run becomes the next run's per-sf regression
       // reference; subset and warm-artifact runs never touch it

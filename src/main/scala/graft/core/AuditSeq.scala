@@ -27,7 +27,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    AQE, which may coalesce the range exchange differently in the
   *    count job and the stamping job, silently remapping partition ids
   *    between the two — the walk reads one materialized RDD, so its
-  *    two jobs always agree.
+  *    two jobs always agree. The same walk stamps `CaptureDiff.capture`'s
+  *    `audit_timestamp`, a per-call constant evaluated on the driver:
+  *    as a Catalyst literal it would be inlined into the upstream's
+  *    generated code and force a fresh compile on every call.
   *
   *  - [[assignWindowed]] — small-data path with whole-stage-codegen:
   *    `row_number()` over an un-partitioned window. Spark plans this as
@@ -49,7 +52,8 @@ object AuditSeq {
     prefixStamp(df, orderCols, Seq(StructField(pkName, LongType, nullable = false)))(
       _ => 1L)((_, before) => Seq(base + before + 1L))
 
-  /** The sorted walk behind [[assign]] and `Pack.packSequences`:
+  /** The sorted walk behind [[assign]], `CaptureDiff.capture` and
+    * `Pack.packSequences`:
     * range-sort `df` by `orderCols` and append `stampFields`, computed
     * per row by `stamp(row, before)` where `before` is the sum of
     * `weight` over every earlier row in the global order. `df` is

@@ -1,7 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Snapshot-diff change capture — the Spark-native replacement for the
   * reference's MySQL AFTER triggers (SURVEY.md §2.3, §2.9). Spark cannot
@@ -40,7 +41,12 @@ object CaptureDiff {
     *                deterministic tests (SURVEY.md §7.4.5); defaults to
     *                capture-time `current_timestamp()` like the
     *                reference's CURRENT_TIMESTAMP
-    *                (cdc_audit_gen_mysql.php:498-499)
+    *                (cdc_audit_gen_mysql.php:498-499). Evaluated ONCE,
+    *                on the driver, when `capture` is called, and stamped
+    *                by the sequencing walk next to `audit_pk`: kept out
+    *                of the join's generated code, where Spark inlines a
+    *                timestamp literal and so compiled a new class on
+    *                every call. Must not refer to a row column.
     * @param basePk  `audit_pk` offset (last pk already in the log)
     * @return DataFrame in audit schema: source columns (image), then
     *         audit_event, audit_timestamp, audit_pk — audit_pk densely
@@ -52,11 +58,18 @@ object CaptureDiff {
     require(oldSnap.schema.fieldNames.sameElements(newSnap.schema.fieldNames),
       "snapshots must share a schema")
     val events = classify(oldSnap, newSnap, pk)
-      .withColumn(AuditSchema.TimestampCol, clock)
-    AuditSeq.assign(
-      events,
-      pk.map(col) :+ col(AuditSchema.EventCol),
-      basePk)
+    require(events.select(clock).queryExecution.analyzed.expressions
+      .forall(_.references.isEmpty),
+      s"capture clock must not refer to a row column: $clock")
+    // one row, no columns: a LocalRelation the optimizer evaluates on
+    // the driver, so this runs no Spark job
+    val at = events.sparkSession
+      .createDataFrame(java.util.List.of(Row.empty), new StructType()).select(clock)
+    val now = at.head().get(0)
+    AuditSeq.prefixStamp(events, pk.map(col) :+ col(AuditSchema.EventCol),
+      Seq(at.schema.head.copy(name = AuditSchema.TimestampCol),
+        StructField(AuditSchema.PkCol, LongType, nullable = false)))(
+      _ => 1L)((_, before) => Seq(now, basePk + before + 1L))
   }
 
   /** Schema-evolution-tolerant capture — the reference's wished-for

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
 
 /** Incremental watermark sync: audit log -> CSV sink (SURVEY.md §2.1
@@ -25,6 +26,12 @@ import org.apache.spark.sql.functions._
   * scale, SURVEY.md §7.4.4); [[SyncJob.syncTable]] takes a
   * `singleFile` flag that coalesces to one part for reference-parity
   * artifacts at test scale.
+  *
+  * Each append is written in `audit_pk` order. A batch that sits in one
+  * partition (every trickle poll, a log round in one file) — or any
+  * `singleFile` batch — is coalesced to one partition and sorted there
+  * in place; only a batch spread over several partitions pays the
+  * parallel range sort (a sampling job and a shuffle).
   */
 object SyncJob {
 
@@ -198,9 +205,15 @@ object SyncJob {
         }.collect()
       val n = parts.map(_._1).sum
       if (n > 0) {
-        val ordered = fresh.orderBy(col(AuditSchema.PkCol))
-        val out     = if (singleFile) ordered.coalesce(1) else ordered
-        out.write.mode("append").options(CsvOptions).csv(sinkDir)
+        // a batch held by one partition (a poll, a log whose new rows sit
+        // in one file) is sorted in place: over coalesce(1) Catalyst
+        // plans a local sort, with no range exchange and so none of its
+        // sampling and shuffle-map jobs. One non-empty partition is at
+        // most one input split, so the sort loses no parallelism
+        val batch =
+          if (singleFile || parts.count(_._1 > 0) == 1) fresh.coalesce(1) else fresh
+        batch.orderBy(col(AuditSchema.PkCol))
+          .write.mode("append").options(CsvOptions).csv(sinkDir)
         // advance the O(1) watermark sidecar only after the append
         // commits; a crash in between leaves a count mismatch, which the
         // next run detects and repairs with a full scan
@@ -292,8 +305,9 @@ object SyncJob {
     * deletes leaves extra already-delivered rows behind — benign (the
     * next wipe removes them); the newest row is never without a live
     * file. Returns the number of rows retained (1, or 0 for an empty
-    * log). Keep-last runs three Spark jobs: the log's schema, one top-1
-    * and the one-row write. `afterSnapshot` is a test seam fired
+    * log). Keep-last runs two Spark jobs, one top-1 and the one-row
+    * write; the log's schema comes from one footer, read on the driver.
+    * `afterSnapshot` is a test seam fired
     * between the listing and the deletes (to exercise a concurrent
     * append).
     *
@@ -316,10 +330,13 @@ object SyncJob {
       .foreach(sub => throw new IllegalArgumentException(
         s"wipeLogDir: $logDir is a partitioned log (sub-directory $sub); " +
           "only a flat log directory can be wiped"))
-    val snapshot = entries.filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getPath)
+    val parts = entries.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val snapshot = parts.map(_.getPath)
     if (snapshot.isEmpty) return 0L
-    val log  = spark.read.parquet(snapshot.toIndexedSeq.map(_.toString): _*)
+    // the log's schema from one part file's footer, read on the driver:
+    // a plain `spark.read.parquet` infers it with a Spark job
+    val log  = spark.read.schema(GraftParquetShim.footerSchema(spark, parts.head))
+      .parquet(snapshot.toIndexedSeq.map(_.toString): _*)
     val tmp  = new org.apache.hadoop.fs.Path(logDir + ".wipe.tmp")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     val n = maxAge match {

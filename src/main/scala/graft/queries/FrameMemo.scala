@@ -92,6 +92,11 @@ object FrameMemo {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try body
     finally {
+      // eviction inside the window is safe: a memo frame built AND
+      // evicted (or replaced) here is missing from `keep`, but
+      // releaseFrame already unpersisted it, which drops it from the
+      // persistent RDDs, so the sweep never meets it; a frame still
+      // owned is in `keep` and is never swept
       val keep = ownedRddIds
       for ((id, rdd) <- spark.sparkContext.getPersistentRDDs
            if !before.contains(id) && !keep.contains(id))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, lit}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -18,13 +19,29 @@ class BenchSpec extends SparkSpec {
       if (calls == 2) throw new IllegalStateException("second pass")
       s.range(10).toDF()
     }
-    val (runs, failed) = Bench.timeQueries(spark, "unused",
+    val (runs, failed, _) = Bench.timeQueries(spark, "unused",
       Seq("q_ok" -> ok, "q_boom" -> boom, "q_late" -> lateBoom), passes = 2)
     assert(runs.length === 2)
     assert(runs.forall(_.keySet == Set("q_ok")), runs)
     assert(failed.keySet === Set("q_boom", "q_late"))
     assert(failed("q_boom").contains("boom"))
     assert(failed("q_late").contains("second pass"))
+  }
+
+  test("the codegen ledger counts the classes each pass compiles: a " +
+    "query inlining a per-call literal compiles in every pass, a fixed " +
+    "query only until its code is cached") {
+    val fixed: Bench.Query = (s, _) => s.range(10).selectExpr("id * 3 + 1")
+    // a long literal is inlined into the generated Java, so a new value
+    // is new source and a cache miss
+    val fresh: Bench.Query = (s, _) => s.range(10).select(col("id") + lit(System.nanoTime()))
+    val (runs, failed, compiles) = Bench.timeQueries(spark, "unused",
+      Seq("q_fixed" -> fixed, "q_fresh" -> fresh), passes = 3)
+    assert(failed.isEmpty)
+    assert(compiles.length === 3)
+    assert(compiles.forall(_.keySet == runs.head.keySet), compiles)
+    assert(compiles.tail.forall(_("q_fixed") == 0L), compiles)
+    assert(compiles.forall(_("q_fresh") >= 1L), compiles)
   }
 
   test("the result line carries the failure count and stays a " +
